@@ -13,8 +13,6 @@ pushdown / column pruning reach the scan either way.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -92,14 +90,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         _SCHEMA_CACHE[key] = df.schema
     if name == "events":
         df = normalize_events_ts(df)
-    if os.environ.get("SPARK_GRAFT_CACHE") == "1":
-        # Battery mode (bench.py): mark every fixture cached — Spark's
-        # CacheManager dedupes by analyzed plan, so repeated load_table
-        # calls across the 90+ queries hit one in-memory columnar copy
-        # instead of re-decoding parquet. Off by default: caching hides
-        # pushdown/pruning behavior that tests assert on, and at 100 TB
-        # you cache *hot* tables deliberately, not everything.
-        df = df.cache()
     return df
 
 

@@ -28,9 +28,9 @@ def stopword_rows() -> list[tuple[str, str]]:
     l55 Spark lexicon frames and their DuckDB oracle VALUES lists.
     Lives here (not in plans.llm) so plan modules can build oracle
     strings at import time without importing another plan module and
-    perturbing the registry's registration ORDER (the driver checks
-    the first ~50 registrations; a module-scope cross-plan import
-    splices the imported module's queries into the head)."""
+    perturbing the registry's registration order (a module-scope
+    cross-plan import registers the imported module's queries at that
+    point)."""
     return [(lang, w) for lang, words in STOPWORDS.items() for w in words]
 
 
@@ -44,20 +44,8 @@ def distinct_tokens(text: Column) -> Column:
     return F.array_distinct(tokens(text))
 
 
-def word_tokens(text: Column) -> Column:
-    """BPE-ish regex tokenization for natural text: word pieces,
-    numbers, or single non-space symbols."""
-    return F.regexp_extract_all(
-        text, F.lit("[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]"), 0
-    )
-
-
 def token_count(text: Column) -> Column:
     return F.size(tokens(text))
-
-
-def char_count(text: Column) -> Column:
-    return F.length(text)
 
 
 def shingles_of(toks: Column, n: int = 3) -> Column:
@@ -123,15 +111,3 @@ QUALITY_SQL = (
     "/ CAST(LENGTH(text) + 1 AS DOUBLE)) + 0.3 * (1 - LEAST((LENGTH(REGEXP_REPLACE(text, "
     "'[a-zA-Z0-9 ]', '', 'g')) / CAST(LENGTH(text) + 1 AS DOUBLE)) * 5, 1.0))), 0.0), 1.0)"
 )
-
-
-def rolling_hash_fingerprint(text: Column, width: int = 64) -> Column:
-    """Deterministic document fingerprint: xxhash64 over fixed-width
-    character windows, min-pooled — a winnowing-style content hash
-    robust to local edits at the ends."""
-    n_windows = F.greatest((F.length(text) - width) / 32 + 1, F.lit(1)).cast("int")
-    window_hashes = F.transform(
-        F.sequence(F.lit(0), n_windows - 1),
-        lambda i: F.xxhash64(F.substring(text, (i * 32 + 1).cast("int"), width)),
-    )
-    return F.array_min(window_hashes)

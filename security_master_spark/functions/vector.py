@@ -40,16 +40,6 @@ def cosine(a: Column, b: Column) -> Column:
     return F.try_divide(dot(a, b), norm(a) * norm(b))
 
 
-def l2_distance(a: Column, b: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(_as_double(a), _as_double(b), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-
 def scale(a: Column, s: Column | float) -> Column:
     s_col = F.lit(s) if not isinstance(s, Column) else s
     return F.transform(_as_double(a), lambda x: x * s_col)

@@ -118,77 +118,15 @@ def _populate_sign_cache(spark, seeds: list[int], n_planes: int, dim: int) -> No
         ]
 
 
-def random_hyperplane_cells(
-    vec: Column,
-    n_planes: int = 8,
-    seed: int = 7,
-    dim: int = 64,
-    signs: list[list[float]] | None = None,
-) -> Column:
-    """Sign-LSH cell id: bit b = sign(<v, h_b>) with deterministic
-    pseudo-random hyperplanes derived from xxhash64(seed, b, i). Cheap
-    JVM-only quantizer for ANN bucketing.
-
-    Pass ``signs`` (from :func:`_plane_signs`) to use precomputed
-    literal hyperplanes — ~dim×planes fewer hash evaluations per row."""
-
-    def plane_component(b: int, i: Column) -> Column:
-        h = F.xxhash64(F.lit(seed), F.lit(b), i)
-        # map hash → {-1, +1}
-        return F.when(h.bitwiseAND(F.lit(1)) == 1, F.lit(1.0)).otherwise(F.lit(-1.0))
-
-    # closure factory — a default-arg lambda would change the apparent
-    # arity PySpark uses to build the higher-order function.
-    def project(b: int):
-        return lambda x, i: x.cast("double") * plane_component(b, i)
-
-    def projected(b: int) -> Column:
-        if signs is not None:
-            plane = F.array(*[F.lit(s) for s in signs[b]])
-            return F.zip_with(vec, plane, lambda x, s: x.cast("double") * s)
-        return F.zip_with(vec, F.sequence(F.lit(0), F.lit(dim - 1)), project(b))
-
-    bits = [
-        F.when(
-            F.aggregate(projected(b), F.lit(0.0), lambda acc, x: acc + x) > 0,
-            F.lit(1 << b),
-        ).otherwise(F.lit(0))
-        for b in range(n_planes)
-    ]
-    out = bits[0]
-    for b in bits[1:]:
-        out = out.bitwiseOR(b)
-    return out
-
-
-def _multi_table_cells(
-    vec: Column, n_planes: int, n_tables: int, dim: int
-) -> Column:
-    """Array of (table_id << 32) | cell_id — one sign-LSH cell per hash
-    table, each table with independent hyperplanes (seed = table id).
-    Pure-JVM expression form (no session needed); for the hot path use
-    :func:`_multi_table_cells_pandas`."""
-    return F.array(
-        *[
-            F.shiftleft(F.lit(t).cast("long"), 32).bitwiseOR(
-                random_hyperplane_cells(vec, n_planes, seed=101 + t, dim=dim)
-            )
-            for t in range(n_tables)
-        ]
-    )
-
-
 def _multi_table_cells_pandas(spark, n_planes: int, n_tables: int, dim: int):
     """Arrow-vectorized cell computation: all tables' projections are
     one (batch × dim) @ (dim × tables·planes) BLAS matmul per Arrow
     batch, then sign → bit-pack. Dense linear algebra is the one place
     the interpreted higher-order expressions genuinely can't compete —
     measured ~10× over the expression form on the fixture corpus. The
-    hyperplanes are the same xxhash64-derived signs as the JVM form
-    (precomputed once by :func:`_plane_signs`); only float-sum order
-    differs, which can flip a near-zero projection's bit — acceptable
-    for a bucketing heuristic, and why ANN is recall-tested, not
-    hash-compared."""
+    hyperplanes are xxhash64-derived signs (precomputed once by
+    :func:`_plane_signs`); float-sum order can flip a near-zero
+    projection's bit — acceptable for a bucketing heuristic."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 

@@ -27,8 +27,9 @@ Two pieces:
 The share threshold was a bracketing heuristic through round 12 (the
 measured arms were 20% and 96%); rounds 13-14 closed the bracket with
 intermediate arms at 50/60/70% dominant share for EVERY family
-(tools/measure_mid_skew.py, 6M-tick corpus, interleaved minimums —
-round 13 measured carry+rank, round 14 cumsum/percentile/ffill):
+(PLANS.md, the two "mid-skew arms" sections; 6M-tick corpus,
+interleaved minimums — round 13 measured carry+rank, round 14
+cumsum/percentile/ffill):
 
 - **carry/trailing family**: crossover is AT ~0.5 — parity (0.98×)
   at 50% share, distributed wins 1.20× at 60% and 1.41× at 70%. The
@@ -150,7 +151,7 @@ def skew_probe(
 #: window/aggregate form — minimums over interleaved batteries at the
 #: 6M-tick stress corpora (PLANS.md rounds 10-13; "balanced" = 5 even
 #: keys (20% top share), "mid" = measured intermediate dominant-key
-#: shares (round 13, tools/measure_mid_skew.py), "dominant" = one key
+#: shares (PLANS.md "Mid-skew arms"), "dominant" = one key
 #: owns 96% of rows; distributed_row_number's balanced/dominant arms
 #: were measured at sf0.1 and a 10×-dominant-segment corpus, its mid
 #: cells on the 6M-tick corpus; distributed_cumsum's

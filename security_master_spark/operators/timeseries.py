@@ -1,5 +1,5 @@
 """Time-series operators for the securities-master surface
-(SURVEY.md §2.11): forward-fill, resampling, returns, rolling stats,
+(SURVEY.md §2.11): forward-fill, OHLC bars, returns, rolling stats,
 cumulative adjustment factors, SCD latest-record.
 
 All are window/groupBy compositions — single shuffle on the series
@@ -156,22 +156,6 @@ def cumulative_product(
     adjustment factors are by definition."""
     w = _series_window(keys, ts).rowsBetween(Window.unboundedPreceding, 0)
     return df.withColumn(out_col, F.exp(F.sum(F.log(col)).over(w)))
-
-
-def resample(
-    df: DataFrame,
-    keys: Sequence[str],
-    ts: str,
-    every: str,
-    aggs: dict[str, Column],
-) -> DataFrame:
-    """Calendar resampling: truncate ``ts`` to ``every`` ('day', 'week',
-    'month', ...) and aggregate per (key, bucket) — daily→monthly bars.
-    ``aggs`` maps output column name → agg expression."""
-    bucket = F.date_trunc(every, F.col(ts)).alias("bucket")
-    return df.groupBy(*keys, bucket).agg(
-        *[c.alias(name) for name, c in aggs.items()]
-    )
 
 
 def ohlc(

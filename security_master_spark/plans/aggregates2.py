@@ -1,9 +1,5 @@
 """Round-4 aggregation candidates (SURVEY.md §2.4): equi-width
 histogram and deterministic per-group mode.
-
-Registered past the driver's ~50-entry correctness cap on purpose
-(see plans/registry.py) — driver rows come in round 4; until then the
-local oracle mirror (tests/test_correctness.py) proves them.
 """
 
 from __future__ import annotations

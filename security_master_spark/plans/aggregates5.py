@@ -2,10 +2,6 @@
 string aggregation (LISTAGG ... WITHIN GROUP — standardized in
 SQL:2016, lands in Spark 4) — the report-friendly "collapse a group
 to one delimited cell" aggregate.
-
-Registered past the driver's ~50-entry correctness cap on purpose
-(see plans/registry.py) — driver rows come in round 5; until then the
-local oracle mirror (tests/test_correctness.py) proves them.
 """
 
 from __future__ import annotations

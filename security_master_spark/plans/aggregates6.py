@@ -9,10 +9,6 @@ so building it from md5-derived bucket indices makes the WHOLE
 sketch — and every estimate read from it — bit-identical across
 engines. This is the one sketch family where the driver's hash gate
 can certify the estimator itself, not just a tolerance band.
-
-Registered past the driver's ~50-entry correctness cap on purpose
-(see plans/registry.py) — driver rows come in round 5; until then the
-local oracle mirror (tests/test_correctness.py) proves them.
 """
 
 from __future__ import annotations

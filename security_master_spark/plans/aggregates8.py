@@ -2,8 +2,6 @@
 (skewness/kurtosis from explicit central moments — the cross-engine-
 deterministic spelling) and exact distinct counting via bitmap words
 (the Roaring-style distributed-distinct technique).
-
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
 """
 
 from __future__ import annotations

@@ -3,10 +3,6 @@ quality surface, extending dq1/dq2): two-sample Kolmogorov–Smirnov,
 chi-square independence, and population-stability-index drift — the
 three screens a production feed-monitoring layer runs between an
 incoming batch and its reference distribution.
-
-Registered past the driver's ~50-entry correctness cap on purpose
-(see plans/registry.py) — driver rows come in round 5; until then the
-local oracle mirror (tests/test_correctness.py) proves them.
 """
 
 from __future__ import annotations

@@ -4,10 +4,6 @@ referential-integrity audit across the star schema's foreign keys.
 dq1 profiles columns in isolation; dq9 is the CROSS-TABLE contract
 check — orphan detection over every FK edge of the schema, the audit
 every warehouse load gate runs before publishing a snapshot.
-
-Registered past the driver's ~50-entry correctness cap on purpose
-(see plans/registry.py) — driver rows come in round 5; until then the
-local oracle mirror (tests/test_correctness.py) proves them.
 """
 
 from __future__ import annotations

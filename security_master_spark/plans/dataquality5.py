@@ -1,8 +1,6 @@
 """Round-7 data-quality batch (SURVEY.md §2.11 dq): calendar
 completeness per stream and feed staleness — the two monitoring
 queries an ingestion SLA dashboard refreshes continuously.
-
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
 """
 
 from __future__ import annotations

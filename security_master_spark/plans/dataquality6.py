@@ -1,8 +1,6 @@
 """Round-7 data-quality batch 2 (SURVEY.md §2.11 dq): near-time
 duplicate detection — replayed events that exact-key screens (dq8)
 miss because the copies arrive microseconds-to-a-second apart.
-
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
 """
 
 from __future__ import annotations

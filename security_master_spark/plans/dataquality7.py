@@ -1,8 +1,6 @@
 """Round-7 data-quality batch 3 (SURVEY.md §2.11 dq): event-sequence
 audit — are event ids monotone in event time per stream? The
 ordering contract every incremental consumer silently assumes.
-
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
 """
 
 from __future__ import annotations

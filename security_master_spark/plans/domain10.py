@@ -2,10 +2,6 @@
 commercial analytics over the order graph): market-basket lift,
 cohort retention, and fulfillment-SLA latency — the three classic
 product/ops panels every warehouse ships.
-
-Registered past the driver's ~50-entry correctness cap on purpose
-(see plans/registry.py) — driver rows come in round 5; until then the
-local oracle mirror (tests/test_correctness.py) proves them.
 """
 
 from __future__ import annotations

@@ -8,10 +8,6 @@ drawdown DEPTH; d51 adds the duration dimension (how LONG the series
 stays underwater). d52 closes the microstructure set: the regression
 of price change on signed volume that d35 (slippage) and d43 (Amihud)
 bracket.
-
-Registered past the driver's ~50-entry correctness cap on purpose
-(see plans/registry.py) — driver rows come in round 5; until then the
-local oracle mirror (tests/test_correctness.py) proves them.
 """
 
 from __future__ import annotations

@@ -8,10 +8,6 @@ The equity-side risk stack (d39 VaR/ES, d24 beta, d15/d51 drawdown)
 had no fixed-income/derivatives sibling; this adds the
 cash-flow-discounting and option-pricing families every securities
 master carries next to its instrument table.
-
-Registered past the driver's ~50-entry correctness cap on purpose
-(see plans/registry.py) — driver rows come in round 5; until then the
-local oracle mirror (tests/test_correctness.py) proves them.
 """
 
 from __future__ import annotations

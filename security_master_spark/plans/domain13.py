@@ -2,9 +2,6 @@
 volatility decomposition and tick-rule order-flow imbalance — two
 tick-native microstructure estimators built from one window pass +
 one per-day rollup each, the d28/d44 collapse-early discipline.
-
-Registered as round-7 rotation candidates (plans/registry.py); until
-their driver rows land, the local oracle mirror proves them.
 """
 
 from __future__ import annotations

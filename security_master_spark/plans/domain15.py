@@ -2,9 +2,6 @@
 correlation between return series, corporate-action back-adjustment
 (the distributed cumulative-product pattern), and rolling OLS beta —
 three cross-sectional/time-series primitives every master needs.
-
-Registered as round-7 rotation candidates (plans/registry.py); until
-their driver rows land, the local oracle mirror proves them.
 """
 
 from __future__ import annotations

@@ -3,9 +3,6 @@ relative performance (tracking error / information ratio), the Roll
 effective-spread estimator, the Lo-MacKinlay variance-ratio test, and
 RFM customer segmentation — portfolio-reporting, microstructure,
 econometric and behavioral primitives.
-
-Registered as round-7 rotation candidates (plans/registry.py); until
-their driver rows land, the local oracle mirror proves them.
 """
 
 from __future__ import annotations

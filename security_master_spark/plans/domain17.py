@@ -2,9 +2,6 @@
 multi-touch conversion attribution, Markov event-transition matrix,
 and the Kaplan-Meier survival estimator — the journey-analytics and
 survival-statistics primitives of an event master.
-
-Registered as round-7 rotation candidates (plans/registry.py); until
-their driver rows land, the local oracle mirror proves them.
 """
 
 from __future__ import annotations

@@ -3,9 +3,6 @@ interpolation at query tenors (the union + bidirectional-fill
 formulation) and business-day settlement arithmetic over a calendar
 dimension — the two reference-data operators every fixed-income /
 operations stack runs constantly.
-
-Registered as round-7 rotation candidates (plans/registry.py); until
-their driver rows land, the local oracle mirror proves them.
 """
 
 from __future__ import annotations

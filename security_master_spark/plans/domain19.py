@@ -2,8 +2,6 @@
 (SURVEY.md §2.11) — parametric portfolio VaR with its
 variance-covariance decomposition certified in-query, CUSUM
 changepoint detection, and lead-lag cross-correlation discovery.
-
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
 """
 
 from __future__ import annotations

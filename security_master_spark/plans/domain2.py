@@ -1,11 +1,6 @@
 """Round-3 securities-master additions (SURVEY.md §2.11): TWAP,
 bucketed as-of join (the dense-right-side scale path, driver-proven
 here), and linear interpolation of gapped series.
-
-Separate module from plans/domain.py purely for driver-evidence
-scheduling: the correctness harness checks ~50 registry entries per
-round in registration order, so new queries must register ahead of the
-already-proven block (see plans/registry.py).
 """
 
 from __future__ import annotations

@@ -1,8 +1,6 @@
 """Round-7 securities-domain batch 2 (SURVEY.md §2.11): portfolio
 turnover from value weights, and calendar (day-of-week) effects with
 per-cell t-statistics.
-
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
 """
 
 from __future__ import annotations

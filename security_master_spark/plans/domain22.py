@@ -2,8 +2,6 @@
 information coefficient (IC) panel — the factor-evaluation staple
 that scores a signal by the daily cross-sectional rank correlation
 with next-day returns.
-
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
 """
 
 from __future__ import annotations

@@ -2,8 +2,6 @@
 capture ratios — the asymmetric-beta scorecard (how much of the
 market's up days does this series capture vs how much of the down
 days it suffers).
-
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
 """
 
 from __future__ import annotations

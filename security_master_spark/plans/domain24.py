@@ -1,8 +1,6 @@
 """Round-7 securities-domain batch 6 (SURVEY.md §2.11): the volume
 profile (volume-at-price histogram with the point of control) — the
 market-profile chart behind support/resistance analytics.
-
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
 """
 
 from __future__ import annotations

@@ -2,8 +2,6 @@
 cointegration screening — hedge regression + closed-form ADF t-stat
 on the residual, the statistical backbone of every pairs-trading desk
 (d44's spread z-score ASSUMES the pair cointegrates; this tests it).
-
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
 """
 
 from __future__ import annotations

@@ -1,8 +1,6 @@
 """Round-7 securities-domain batch 8 (SURVEY.md §2.11): overnight vs
 intraday return decomposition — the close-to-open / open-to-close
 split behind every "when does the return actually accrue?" study.
-
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
 """
 
 from __future__ import annotations

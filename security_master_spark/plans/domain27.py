@@ -1,8 +1,6 @@
 """Round-7 securities-domain batch 9 (SURVEY.md §2.11): order-flow
 sign autocorrelation — the persistence of tick-rule trade signs at
 lags 1..5, the microstructure signature of order splitting.
-
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
 """
 
 from __future__ import annotations

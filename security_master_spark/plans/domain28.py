@@ -2,8 +2,6 @@
 cross-sectional momentum backtest — rank by trailing return, hold the
 spread portfolio one day, score the strategy (d84's IC is the
 regression scorecard; this is the portfolio spelling).
-
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
 """
 
 from __future__ import annotations

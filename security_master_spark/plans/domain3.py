@@ -1,10 +1,6 @@
 """Round-3 securities-master batch 2 (SURVEY.md §2.11): EWMA,
 RSI, time-series gap detection, and a Deequ-style data-quality
 constraint profile.
-
-Separate module (like plans/domain2.py) purely for driver-evidence
-scheduling: new queries must register inside the correctness
-harness's ~50-entry head block (see plans/registry.py).
 """
 
 from __future__ import annotations

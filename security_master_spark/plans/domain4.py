@@ -1,10 +1,5 @@
 """Round-4 securities-master candidates (SURVEY.md §2.11): robust
 outlier detection (median/MAD) and position & cost-basis tracking.
-
-Registered AFTER the round-3 head block (plans/registry.py): these
-queries will rotate into the driver's ~50-entry correctness window
-next round; until then the local mirror (tests/test_correctness.py)
-is their evidence.
 """
 
 from __future__ import annotations

@@ -1,10 +1,5 @@
 """Round-4 securities-master candidates (SURVEY.md §2.11): VWAP,
 Bollinger bands, MACD, and rolling beta vs the market composite.
-
-Registered past the driver's ~50-entry correctness cap on purpose
-(see plans/registry.py) — they earn driver rows in round 4; until
-then the local oracle mirror (tests/test_correctness.py) proves them
-at sf0.001.
 """
 
 from __future__ import annotations

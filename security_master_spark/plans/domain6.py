@@ -1,10 +1,6 @@
 """Round-4 securities-master candidates, batch 2 (SURVEY.md §2.11):
 range-based volatility estimators, cross-sectional ranking,
 rank-based winsorization, and the pairwise correlation matrix.
-
-Registered past the driver's ~50-entry correctness cap on purpose
-(see plans/registry.py) — driver rows come in round 4; until then the
-local oracle mirror (tests/test_correctness.py) proves them.
 """
 
 from __future__ import annotations

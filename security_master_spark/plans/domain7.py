@@ -2,10 +2,6 @@
 oscillator, average true range, on-balance volume, and return
 autocorrelation — the remaining classic technical/diagnostic family.
 
-Registered past the driver's ~50-entry correctness cap on purpose
-(see plans/registry.py) — driver rows come in round 5; until then the
-local oracle mirror (tests/test_correctness.py) proves them.
-
 All four collapse the tick scan to O(types x days) daily bars in one
 hash aggregate first (the d25 discipline), so every window after the
 first Exchange runs on a tiny frame — the shape that survives 100 TB.

@@ -2,10 +2,6 @@
 §2.11): tail-risk measures (VaR / expected shortfall), market
 concentration (HHI), and event-funnel conversion — the risk/compliance
 and behavioral-analytics surfaces of a production master.
-
-Registered past the driver's ~50-entry correctness cap on purpose
-(see plans/registry.py) — driver rows come in round 5; until then the
-local oracle mirror (tests/test_correctness.py) proves them.
 """
 
 from __future__ import annotations
@@ -57,7 +53,7 @@ def d39_var_es(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate (same key); the customer dim broadcasts into the fact
     scan.
 
-    Plan decision (round 11, measured — tools/measure_d39_rank.py):
+    Plan decision (round 11, measured — PLANS.md "d39 rank-plan study"):
     the round-10 verdict named this query as the registry consumer
     for operators/rolling.py:distributed_row_number. The swap was
     built, hash-certified green against this unchanged oracle, and

@@ -2,10 +2,6 @@
 §2.11): downside-risk-adjusted performance (Sortino / Calmar) and
 Amihud illiquidity — the risk-report columns next to d33's Sharpe and
 d15's drawdown.
-
-Registered past the driver's ~50-entry correctness cap on purpose
-(see plans/registry.py) — driver rows come in round 5; until then the
-local oracle mirror (tests/test_correctness.py) proves them.
 """
 
 from __future__ import annotations

@@ -4,10 +4,6 @@ over the part co-purchase graph. Connected components (l16) covered
 the union-find/closure family; these add the other two canonical
 distributed-graph workloads — fixed-point iteration and the
 join-heavy motif count.
-
-Registered past the driver's ~50-entry correctness cap on purpose
-(see plans/registry.py) — driver rows come in round 5; until then the
-local oracle mirror (tests/test_correctness.py) proves them.
 """
 
 from __future__ import annotations

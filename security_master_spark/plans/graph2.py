@@ -6,10 +6,6 @@ g1 (PageRank) covered fixed-point iteration, g2/g3 the motif count;
 these add the remaining canonical shapes — the wedge self-join scored
 per candidate pair, and the one-pass structural profile every graph
 job starts with.
-
-Registered past the driver's ~50-entry correctness cap on purpose
-(see plans/registry.py) — driver rows come in round 5; until then the
-local oracle mirror (tests/test_correctness.py) proves them.
 """
 
 from __future__ import annotations

@@ -2,8 +2,6 @@
 the customer–supplier trade graph — the degeneracy decomposition that
 finds the dense trading core (and whose peel order bounds g2's
 triangle orientation).
-
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
 """
 
 from __future__ import annotations

@@ -665,8 +665,7 @@ def l14_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing-style rolling-window fingerprint: md5 over 64-char
     windows at stride 32, min-pooled per document — robust to edits
     near document ends, and portable (md5) so the oracle checks every
-    hash. The xxhash64 twin (functions/text.py:rolling_hash_fingerprint)
-    is the cheaper production form."""
+    hash."""
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     max_i = F.greatest(
         F.floor((F.length("text") - 64) / F.lit(32.0)), F.lit(0)

@@ -2,10 +2,6 @@
 blocked fuzzy string joining (entity resolution), distributed
 embedding covariance, and PCA projection — the feature-space
 diagnostics next to l35/l36's centroid family.
-
-Registered past the driver's ~50-entry correctness cap on purpose
-(see plans/registry.py) — driver rows come in round 5; until then the
-local oracle mirror (tests/test_correctness.py) proves them.
 """
 
 from __future__ import annotations

@@ -2,10 +2,6 @@
 source-to-source vocabulary overlap (the corpus-composition
 similarity matrix) and tokenizer fertility by language (the
 corpus-sizing diagnostic that decides tokenizer budgets).
-
-Registered past the driver's ~50-entry correctness cap on purpose
-(see plans/registry.py) — driver rows come in round 5; until then the
-local oracle mirror (tests/test_correctness.py) proves them.
 """
 
 from __future__ import annotations
@@ -468,9 +464,8 @@ def l54_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY true_lang, pred_lang
     """.format(
         # functions.text, NOT plans.llm: a module-scope import of
-        # another plan module here would splice llm's registrations
-        # into the registry head mid-block (caught in round 6 when it
-        # pushed 21 proven queries into the rotation's head-50).
+        # another plan module here would register llm's queries at
+        # this point of the registration order.
         values=", ".join(
             f"('{lang}', '{w}')" for lang, w in __import__(
                 "security_master_spark.functions.text",

@@ -7,10 +7,6 @@ chunk granularity and measure how much of each document survives,
 the number a curation team actually budgets against. l10/l26 score
 documents; l57 accounts for WHICH rule kills each document per
 source — the funnel report that decides which filter to retune.
-
-Registered past the driver's ~50-entry correctness cap on purpose
-(see plans/registry.py) — driver rows come in round 5; until then the
-local oracle mirror (tests/test_correctness.py) proves them.
 """
 
 from __future__ import annotations

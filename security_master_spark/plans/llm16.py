@@ -2,8 +2,6 @@
 calibration (estimated vs exact Jaccard, per pair) and the n-gram
 coverage growth curve (how fast new n-grams appear as the corpus
 grows in ingestion order — the data-curation scaling diagnostic).
-
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
 """
 
 from __future__ import annotations

@@ -1,8 +1,6 @@
 """Round-7 LLM-pipeline batch 2 (SURVEY.md §2.12): embedding-norm
 quality audit — the vector-store ingest gate that catches collapsed,
 blown-up, or un-normalized embeddings before they poison retrieval.
-
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
 """
 
 from __future__ import annotations

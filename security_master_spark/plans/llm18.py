@@ -2,8 +2,6 @@
 profile — the size distribution of duplicate groups, i.e. the
 "what will dedup actually delete?" preview every curation run reads
 before committing.
-
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
 """
 
 from __future__ import annotations

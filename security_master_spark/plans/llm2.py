@@ -1,10 +1,6 @@
 """Round-3 LLM-data-pipeline additions: distinctive-term extraction
 (TF-IDF), deterministic stratified sampling, regex redaction (the PII
 scrub pattern), and incremental batch-vs-corpus dedup.
-
-Separate module from plans/llm.py purely for driver-evidence
-scheduling (see plans/registry.py: ~50-entry per-round cap, new
-queries register ahead of the proven block).
 """
 
 from __future__ import annotations

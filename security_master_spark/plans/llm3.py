@@ -1,10 +1,6 @@
 """Round-3 LLM-pipeline batch 2 (SURVEY.md §2.12): within-document
 repetition signals (Gopher-style quality filtering) and character-level
 Shannon entropy.
-
-Separate module (like plans/llm2.py) purely for driver-evidence
-scheduling: new queries must register inside the correctness
-harness's ~50-entry head block (see plans/registry.py).
 """
 
 from __future__ import annotations

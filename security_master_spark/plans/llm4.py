@@ -1,9 +1,5 @@
 """Round-4 LLM-pipeline candidates (SURVEY.md §2.12): unigram
 language-model surprisal scoring.
-
-Registered AFTER the round-3 head block (plans/registry.py): rotates
-into the driver's correctness window next round; the local mirror is
-its evidence until then.
 """
 
 from __future__ import annotations

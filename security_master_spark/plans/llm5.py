@@ -1,10 +1,6 @@
 """Round-4 LLM-pipeline candidates (SURVEY.md §2.12): benchmark
 decontamination, sliding-window chunking with overlap, and source
 mixture rebalancing.
-
-Registered past the driver's ~50-entry correctness cap on purpose
-(see plans/registry.py) — driver rows come in round 4; until then the
-local oracle mirror (tests/test_correctness.py) proves them.
 """
 
 from __future__ import annotations

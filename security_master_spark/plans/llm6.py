@@ -1,9 +1,5 @@
 """Round-4 LLM-pipeline candidates, batch 2 (SURVEY.md §2.12):
 bigram-LM surprisal and vocabulary-coverage scoring.
-
-Registered past the driver's ~50-entry correctness cap on purpose
-(see plans/registry.py) — driver rows come in round 4; until then the
-local oracle mirror (tests/test_correctness.py) proves them.
 """
 
 from __future__ import annotations

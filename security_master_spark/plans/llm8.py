@@ -1,10 +1,6 @@
 """Round-5 LLM-pipeline candidates, batch 3 (SURVEY.md §2.12):
 corpus-composition diagnostics (language mix), deterministic
 importance resampling, and embedding quantization error.
-
-Registered past the driver's ~50-entry correctness cap on purpose
-(see plans/registry.py) — driver rows come in round 5; until then the
-local oracle mirror (tests/test_correctness.py) proves them.
 """
 
 from __future__ import annotations

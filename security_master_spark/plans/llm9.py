@@ -2,10 +2,6 @@
 substring-level duplication rate (the Lee-et-al-style "what fraction
 of this document's n-grams also occur elsewhere" measure) and lexical
 diversity (type-token ratio).
-
-Registered past the driver's ~50-entry correctness cap on purpose
-(see plans/registry.py) — driver rows come in round 5; until then the
-local oracle mirror (tests/test_correctness.py) proves them.
 """
 
 from __future__ import annotations

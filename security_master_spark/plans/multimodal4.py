@@ -1,8 +1,6 @@
 """Round-7 multimodal batch 2 (SURVEY.md §2.12): audio framing — the
 overlapping-frame energy grid (STFT/VAD front end), the audio twin of
 m7's image tiling, oracle-certified frame by frame.
-
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
 """
 
 from __future__ import annotations

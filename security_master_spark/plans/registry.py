@@ -39,22 +39,9 @@ def register(name: str, oracle: Optional[str] = None) -> Callable[[QueryFn], Que
 
 
 def _load_all_plan_modules() -> None:
-    # Import for registration side effects. ORDER MATTERS: the driver's
-    # correctness harness checks at most ~50 entries per round in
-    # registration order (rounds 1-5 all stopped at exactly 50).
-    #
-    # ROUND-6 ROTATION, WAVE 2 (this head block is exactly 50 entries):
-    # the never-driver-checked block from rounds 4-5, in its original
-    # candidate order, with one deliberate change vs the round-5 plan:
-    # domain12 (the d54-d59 financial stack — bond analytics, Newton
-    # YTM, Black-Scholes, Monte-Carlo, implied vol, min-variance
-    # pairs) is pulled forward into the head because the round-5
-    # verdict names it the highest-value conversion, and udfs4 /
-    # aggregates6 / streaming_batch2 / dataquality2 / udfs5 /
-    # sources_io8 / scalars3 / dataquality3 / relational4 slip to the
-    # guarded ROUND-7 list to make exactly 50. The oracle-less entry
-    # in this block (a24_hll_partial_union) earns its rows-only driver
-    # evidence. tests/test_plans.py pins this order.
+    # Import for registration side effects. queries()/oracle_sql() put
+    # DRIVER_WINDOW first; the rest follow in the registration order
+    # this import list sets.
     from security_master_spark.plans import (  # noqa: F401
         domain9,
         llm10,
@@ -68,13 +55,6 @@ def _load_all_plan_modules() -> None:
         domain12,
         llm12,
         graph2,
-        # ROTATION MECHANISM (round 7+): the driver window is
-        # pinned EXPLICITLY by ROUND9_HEAD below (queries()/
-        # oracle_sql() reorder the registration dict), so module
-        # import order here only matters for within-the-rest
-        # ordering. New modules still append after this block and
-        # their names must join
-        # tests/test_plans.py::_ROUND10_REMAINDER (wave guard).
         udfs4,
         aggregates6,
         streaming_batch2,
@@ -84,8 +64,6 @@ def _load_all_plan_modules() -> None:
         scalars3,
         dataquality3,
         relational4,
-        # Round-6 additions append here (they become round-7 rotation
-        # candidates, after the remainder above).
         multimodal2,
         domain13,
         aggregates7,
@@ -105,14 +83,6 @@ def _load_all_plan_modules() -> None:
         relational6,
         domain18,
         sources_io10,
-        # Round-7 additions append here. The round-8 window
-        # (ROUND8_HEAD below, now historical) certified all 47
-        # never-checked names + a8/a12/t3 re-proofs — 100% registry
-        # driver coverage as of CORRECTNESS_r08. Round 9 rotates on
-        # evidence freshness: ROUND9_HEAD pins l13/l20 (new hash
-        # oracles, no driver hash row) + the 48 oldest r02/r03
-        # greens. Round-9 additions, if any, must join
-        # tests/test_plans.py::_ROUND10_REMAINDER.
         domain19,
         domain20,
         windows4,
@@ -147,8 +117,6 @@ def _load_all_plan_modules() -> None:
         llm20,
         windows5,
         relational8,
-        # Wave 1 (driver-proven green in round 5) + everything proven
-        # in rounds 1-4 — registers last.
         domain7,
         llm7,
         aggregates3,
@@ -190,512 +158,12 @@ def _load_all_plan_modules() -> None:
         sources_io,
     )
 
-
-#: ROUND-10 HEAD PIN (round-9 verdict order #1): evidence-freshness
-#: rotation, second window. Composition deviates from the staged plan
-#: in one deliberate way — the stale-evidence rule the round-9 verdict
-#: itself states ("anything whose oracle changes jumps the queue")
-#: applies to the TEN queries whose oracles gained the shared
-#: zero-padded (epoch_us ++ id) tie-break key in the round-9
-#: adversarial iteration 2 (d25/d29-d33/d42-d44/d74,
-#: functions/ordering.py) AFTER their last CORRECTNESS rows (r04-r07):
-#: their only post-change evidence is ADVERSARIAL.json, so they
-#: outrank merely-old r04 greens and take the backfill slots.
-#: Sections: (1) t3 — the round-9 verdict pins it to jump (its oracle
-#: moved to integer-µs boundary math in commit 73540ff; this row
-#: certifies the µs form at driver settings) + the ten tie-break-key
-#: queries; (2) the 7 names displaced from ROUND9_HEAD mid-round
-#: (last rows r03); (3) the 31 remaining r03 rows — 30 hash-greens +
-#: a13 (weak by design; fresh rows-only row); (4) l21 (r02 rows-only,
-#: weak by design). After this window: NO registered query's driver
-#: evidence predates r04, with zero exceptions.
-#: Historical round-11 window (superseded by ROUND12_HEAD; kept so
-#: the rotation ledger stays in code — all 50 rows landed hash-green
-#: in CORRECTNESS_r11.json). Original pin rationale (round-10 verdict
-#: order #1): evidence-freshness
-#: rotation, third window — the staged plan (48 r04 greens + 2 r05
-#: backfill) with the standing queue-jump rule applied: t4's oracle
-#: moved to integer-µs boundary math + the new_session DESC equal-ts
-#: tiebreak this round (its r07 row certifies the superseded
-#: double-seconds oracle) and displaces one backfill slot. d39 (the
-#: round-10 verdict's order-#4 candidate) does NOT jump: its
-#: registered plan stayed the window form on the measured sf0.1
-#: negative (0.49× — tools/measure_d39_rank.py, PLANS.md round-11);
-#: the distributed spelling ships as the unregistered
-#: d39_var_es_distributed sibling, value-equal by test. So: t4 + 48
-#: r04 greens + d34 (the oldest r05). After this window lands: no
-#: query's driver evidence predates r05 (verify: python
-#: tools/evidence_age.py --check).
-ROUND11_HEAD: tuple[str, ...] = (
-    # (1) queue-jump: t4 stale oracle
-    "t4_dynamic_session_window",
-    # (1b) backfill from the oldest r05 green
-    "d34_intraday_seasonality",
-    # (2) the 48 r04-evidence greens, age order (= registration order
-    # within the round; d25 jumped in round 10 already)
-    "d19_mad_outliers",
-    "l29_unigram_surprisal",
-    "io8_snapshot_diff",
-    "d21_vwap",
-    "d22_bollinger",
-    "d23_macd",
-    "d24_rolling_beta",
-    "l30_decontamination",
-    "l31_chunk_overlap",
-    "l32_source_mix",
-    "d26_cross_sectional_rank",
-    "d27_winsorize",
-    "d28_pairwise_correlation",
-    "l33_bigram_surprisal",
-    "l34_vocab_coverage",
-    "a15_histogram",
-    "a16_mode",
-    "io9_orc_roundtrip",
-    "q1_pricing_summary",
-    "q2_star_join_revenue",
-    "q3_top_orders",
-    "q4_filter_predicates",
-    "q5_left_outer_join",
-    "q6_semi_join",
-    "q7_anti_join",
-    "q8_set_ops",
-    "q9_scalar_subquery",
-    "q10_groupby_having",
-    "q11_correlated_exists",
-    "q12_in_subquery",
-    "q13_lateral_topn",
-    "q14_cross_join",
-    "q15_pagination",
-    "w1_ranking_functions",
-    "w2_lag_lead",
-    "w3_moving_average",
-    "w4_range_frame",
-    "w5_topk_per_group",
-    "w6_global_topk",
-    "u1_python_scalar_udf",
-    "u2_pandas_scalar_udf",
-    "u3_grouped_agg_udaf",
-    "u4_apply_in_pandas",
-    "u5_map_in_pandas",
-    "u6_udtf_lateral",
-    "m1_multimodal_features",
-    "m2_frame_sample",
-    "m3_embedding_batch_score",
-)
-
-
-#: Historical round-10 window (superseded by ROUND11_HEAD; kept so
-#: the rotation ledger stays in code — all 50 rows landed in
-#: CORRECTNESS_r10.json: 48 hash-green, a13/l21 ``no_oracle`` by
-#: design).
-ROUND10_HEAD: tuple[str, ...] = (
-    # (1) stale-oracle queue-jumps: driver rows predate the round-9
-    # oracle changes (t3 integer-µs; d-family (ts,id) tie-break keys)
-    "t3_session_window_native",
-    "d25_range_volatility",
-    "d29_stochastic_oscillator",
-    "d30_atr",
-    "d31_obv",
-    "d32_return_autocorr",
-    "d33_sharpe_ratio",
-    "d42_sortino_calmar",
-    "d43_amihud_illiquidity",
-    "d44_pair_spread_zscore",
-    "d74_kaplan_meier",
-    # (2) the 7 names displaced from ROUND9_HEAD mid-round — r03
-    "l24_regex_scrub",
-    "l25_incremental_dedup",
-    "l26_length_filter",
-    "io7_schema_evolution",
-    "d16_ewma",
-    "d17_rsi",
-    "d18_gap_detection",
-    # (3) the remaining r03 rows, registration order
-    "dq1_quality_profile",
-    "l27_repetition_ratio",
-    "l28_char_entropy",
-    "a1_rollup",
-    "a2_cube",
-    "a3_grouping_sets",
-    "a4_pivot",
-    "a5_unpivot",
-    "a6_stats_aggregates",
-    "a7_count_distinct",
-    "a9_collect_sorted",
-    "a10_percentiles",
-    "a13_approx_percentile",
-    "a11_column_profile",
-    "a14_regression_aggs",
-    "s1_string_functions",
-    "s2_regex_levenshtein",
-    "s3_date_functions",
-    "s5_array_functions",
-    "s6_higher_order_functions",
-    "s7_json_functions",
-    "s8_json_aggregate",
-    "s9_hash_functions",
-    "s10_explode_unnest",
-    "s11_sequence_generate",
-    "s12_conditional_null",
-    "s13_map_functions",
-    "s14_date_formatting",
-    "s15_array_functions_2",
-    "s16_bitwise",
-    "s17_null_handling",
-    # (4) the single r02 row left anywhere (weak by design)
-    "l21_ivf_topk",
-)
-
-
-#: Historical round-9 window (superseded by ROUND10_HEAD; kept so the
-#: rotation ledger stays in code — all 50 rows landed hash-green in
-#: CORRECTNESS_r09.json, the first all-green window).
-#: Original ledger note (round-8 verdict order #1): with 100% of the
-#: registry driver-checked as of r08, rotation switches to
-#: evidence-freshness — oldest driver row first. Composition:
-#: (1) l13/l20 pinned in slots 1-2: their full hash oracles (commit
-#: 01a6151, ``plans/llm._sign_planes_sql``) postdate their only
-#: driver rows (r02, rows-only) and have never produced a driver
-#: hash row; (2) the 48 oldest hash-green names, ordered by
-#: (latest CORRECTNESS round, registration order) — the r02 greens
-#: (l-family, d1-d11, io1-io6) then r03 greens; (3) seven slots
-#: re-assigned mid-round to the queries whose ORACLES changed in the
-#: round-9 adversarial fixes (stale-evidence > old-evidence). After
-#: this window runs, every round-9 semantic change has a driver row
-#: and no remaining query's evidence is older than r03.
-ROUND9_HEAD: tuple[str, ...] = (
-    # (1) new-oracle debt: full hash oracles with no driver hash row
-    "l13_ann_lsh_topk",
-    "l20_embedding_near_dup_lsh",
-    # (2) oldest hash evidence — last driver rows r02
-    "l1_exact_dedup_groups",
-    "l2_fingerprint_dedup",
-    "l3_token_stats",
-    "l4_jaccard_pairs",
-    "l5_cosine_topk",
-    "l6_knn_per_label",
-    "l9_language_id",
-    "l10_quality_scores",
-    "l11_multimodal_join",
-    "l12_ngram_fingerprint",
-    "l14_winnow_fingerprint",
-    "l15_bpe_token_count",
-    "l16_dedup_clusters",
-    "l17_embedding_near_dup",
-    "l18_hash_split",
-    "l19_concat_chunks",
-    "d1_asof_join",
-    "d2_interval_join",
-    "d3_forward_fill",
-    "d4_adjustment_factor",
-    "d5_daily_ohlc",
-    "d6_returns_rolling_vol",
-    "d7_scd_latest",
-    "d8_sessionize",
-    "d9_eod_pipeline",
-    "d11_skew_safe_rollup",
-    "d10_calendar_align",
-    "io1_csv_roundtrip",
-    "io2_json_roundtrip",
-    "io3_parquet_sink_partitioned",
-    "io4_bucketed_join",
-    "io6_merge_upsert",
-    "io5_api_ingest",
-    # (2 cont.) last driver rows r03
-    "t1_tumbling_window",
-    "t2_sliding_window",
-    "d12_twap",
-    "d13_asof_bucketed",
-    "d14_linear_interpolation",
-    "d15_max_drawdown",
-    "l22_distinctive_terms",
-    "l23_stratified_sample",
-    # (3) round-9 oracle/semantics changes OUTSIDE the original pin
-    # (adversarial-sweep fixes + t3's integer-µs boundary math):
-    # their old driver rows certify a superseded oracle, which
-    # outranks merely-old evidence. These 7 displaced the 7
-    # youngest-evidence r03 tail names (l24/l25/l26, io7, d16/d17/
-    # d18), which move to the round-10 window.
-    "d20_position_tracking",
-    "a25_approx_top_k",
-    "l36_label_cohesion",
-    "l46_fuzzy_name_join",
-    "l47_embedding_covariance",
-    "s4_math_functions",
-    "t3_session_window_native",
-)
-
-
-#: Historical round-12 window (superseded by ROUND13_HEAD; kept so
-#: the rotation ledger stays in code — all 50 rows landed in
-#: CORRECTNESS_r12.json: 47 hash-green, d37/a20/a21 ``no_oracle`` by
-#: design). Original pin rationale (round-11 verdict order #1):
-#: evidence-freshness
-#: rotation, fourth window — the staged plan executed verbatim, with
-#: ZERO queue-jumps (round 12 changes no registered query's oracle or
-#: physical plan: the guards/selector land in operators/ on the
-#: unregistered toolkit spellings). Composition: (1) the 43 remaining
-#: r05-evidence rows in evidence-age order (= tools/evidence_age.py's
-#: candidate order; d34 took the r11 backfill slot); (2) 7 backfill
-#: from the oldest r06 hash-GREENS — l48 (r06, ``no_oracle`` by
-#: design) is skipped by the "greens" rule and rotates with the r06
-#: remainder next round. After this window lands: no query's driver
-#: evidence predates r06 (verify: python tools/evidence_age.py
-#: --check). Standing rule: anything whose oracle (or physical plan)
-#: changes mid-round jumps the queue.
-ROUND12_HEAD: tuple[str, ...] = (
-    # (1) the 43 r05-evidence rows, age order
-    "d35_execution_slippage",
-    "d36_seasonal_decomposition",
-    "d37_ewma_exact_distributed",
-    "d38_forward_fill_distributed",
-    "dq2_benford",
-    "l35_label_centroids",
-    "l37_shingle_novelty",
-    "a17_weighted_stats",
-    "a18_conditional_aggregates",
-    "a19_grouping_id",
-    "io10_gzip_csv_roundtrip",
-    "l38_language_mix",
-    "l39_importance_resample",
-    "l40_embedding_quantization",
-    "l41_source_drift",
-    "l42_dedup_pipeline",
-    "l43_zipf_slope",
-    "u7_map_in_arrow",
-    "u8_polymorphic_udtf",
-    "u9_arrow_optimized_udf",
-    "io11_python_datasource",
-    "io12_zorder_roundtrip",
-    "s18_variant_type",
-    "s19_collation",
-    "d39_var_es",
-    "d40_hhi_concentration",
-    "d41_event_funnel",
-    "l44_duplicate_ngram_fraction",
-    "l45_type_token_ratio",
-    "a20_kll_quantile_merge",
-    "a21_theta_sketch_sets",
-    "q16_recursive_cte",
-    "dq3_observed_metrics",
-    "g1_pagerank",
-    "g2_triangle_count",
-    "g3_triangle_estimate",
-    "dq4_ks_test",
-    "dq5_chisq_independence",
-    "dq6_psi_drift",
-    "dq7_message_rate_spike",
-    "dq8_duplicate_events",
-    "w7_exclude_current_row",
-    "w8_groups_frame",
-    # (2) backfill: the 7 oldest r06 hash-greens (l48 skipped —
-    # no_oracle by design, not a "green")
-    "d45_time_to_convert",
-    "d46_isin_validation",
-    "q17_pipe_syntax",
-    "q18_parameterized_sql",
-    "q19_group_by_all",
-    "q20_identifier_clause",
-    "q21_union_by_name",
-)
-
-
-#: ROUND-13 ROTATION PLAN (staged at round-12 close): after the
-#: ROUND12_HEAD window lands, the oldest evidence anywhere is r06 —
-#: the 37 remaining r06 rows (l48, q22, u10, u11, io13-io16, a22,
-#: a23, …, evidence-age order) — plus 13 backfill from the oldest
-#: r07 greens makes the next 50. Run ``python tools/evidence_age.py
-#: --stage`` (added round 12) to print the ready-to-paste pin from
-#: the committed CORRECTNESS files by the standing rules — it
-#: reproduces ROUND12_HEAD byte-for-byte from the r11 artifacts
-#: (tests/test_evidence_stage.py pins the rules) — instead of
-#: trusting this comment; preflight still runs ``--check``. Anything
-#: whose oracle (or physical plan) changes in round 13 jumps the
-#: queue (the round-9 stale-evidence rule, standing — the stager
-#: cannot know what changed, so apply it by hand on top).
-#:
-#: Round-13 queue-jumpers (round-12 session 2): seven queries'
-#: class-C forced broadcasts were dropped in the broadcast-site audit
-#: (PLANS.md) — hint removal only, re-hash-verified green at sf0.01
-#: this session. Three of them (dq4_ks_test, d39_var_es,
-#: d40_hhi_concentration) sit in ROUND12_HEAD, so the round-12 driver
-#: pass certifies their NEW plans already; the other FOUR below must
-#: queue-jump the round-13 window regardless of evidence age (the
-#: round-9 stale-evidence rule). ``tools/evidence_age.py --stage``
-#: reads this constant and places them at the front of the staged
-#: pin mechanically — declare mid-round plan/oracle changes HERE, not
-#: by editing the stager's output.
-#: The audit's second sweep added two unbounded-aggregate sides
-#: (Heap's-law vocabularies): l22's per-token df and l29's
-#: tf>=MIN_COUNT vocab — same hint-removal treatment, same rule.
-ROUND13_QUEUE_JUMPERS: tuple[str, ...] = (
-    "w13_ratio_to_report",
-    "d47_basket_lift",
-    "d49_fulfillment_sla",
-    "g4_link_prediction",
-    "l22_distinctive_terms",
-    "l29_unigram_surprisal",
-)
-
-
-#: Historical round-13 window (superseded by ROUND14_HEAD; kept so
-#: the rotation ledger stays in code — all 50 rows landed in
-#: CORRECTNESS_r13.json: 48 hash-green, l48/a24 ``no_oracle`` by
-#: design). Original pin rationale (round-12 verdict order #1):
-#: evidence-freshness rotation, fifth window — the stager's output verbatim
-#: (``python tools/evidence_age.py --stage`` against the committed
-#: r01-r12 artifacts; tests/test_evidence_stage.py's exactness clause
-#: pins the reproduction while r12 is the newest artifact).
-#: Composition: (0) the six ROUND13_QUEUE_JUMPERS — the only plans in
-#: the repo whose current text (post the round-12 broadcast-site
-#: audit's hint removals) lacks driver evidence — front-loaded by the
-#: standing round-9 stale-evidence rule; (1) the 34 remaining
-#: r06-evidence rows in age-then-registration order (l48 heads it:
-#: skipped by the r12 backfill "greens" rule, it rotates with its
-#: round's main body here); (2) 10 backfill from the oldest r07
-#: hash-greens. After this window lands: no query's driver evidence
-#: predates r07 (verify: python tools/evidence_age.py --check).
-ROUND13_HEAD: tuple[str, ...] = (
-    # (0) queue-jumpers: plan changed in round 12 after last evidence
-    "w13_ratio_to_report",
-    "d47_basket_lift",
-    "d49_fulfillment_sla",
-    "g4_link_prediction",
-    "l22_distinctive_terms",
-    "l29_unigram_surprisal",
-    # (1) the 34 r06-evidence rows, age order
-    "l48_pca_project",
-    "q22_skyline",
-    "u10_sql_scalar_udf",
-    "u11_sql_table_udf",
-    "io13_xml_roundtrip",
-    "io14_file_metadata",
-    "io15_incremental_aggregate",
-    "io16_malformed_csv_handling",
-    "a22_listagg",
-    "a23_rolling_distinct",
-    "a24_hll_partial_union",
-    "l49_source_vocab_overlap",
-    "l50_tokenizer_fertility",
-    "l51_weighted_sample",
-    "l52_boilerplate_chunks",
-    "l53_dedup_survivorship",
-    "l54_split_leakage",
-    "l55_langid_confusion",
-    "d48_cohort_retention",
-    "d50_volume_bars",
-    "d51_drawdown_duration",
-    "d52_kyle_lambda",
-    "d53_cusip_sedol_validation",
-    "d54_bond_analytics",
-    "d55_ytm_newton",
-    "d56_black_scholes",
-    "d57_monte_carlo_pricing",
-    "d58_implied_volatility",
-    "d59_min_variance_pairs",
-    "l56_chunk_dedup_retention",
-    "l57_filter_funnel",
-    "l58_corpus_build_pipeline",
-    "l59_bleu_pairs",
-    "g5_degree_histogram",
-    # (2) backfill: the 10 oldest r07 hash-greens
-    "u12_pandas_api_on_spark",
-    "a26_count_min_sketch",
-    "a27_transpose",
-    "t5_late_data_accounting",
-    "dq9_referential_integrity",
-    "u13_iter_pandas_udf",
-    "io17_text_roundtrip",
-    "s20_url_functions",
-    "s21_data_protection",
-    "s22_outer_explode",
-)
-
-
-#: Historical round-14 window (superseded by ROUND15_HEAD; kept so
-#: the rotation ledger stays in code — all 50 rows landed in
-#: CORRECTNESS_r14.json: 50 hash-green, 0 ``no_oracle`` rows in this
-#: window). Original pin rationale (round-13 verdict order #1):
-#: evidence-freshness rotation, sixth window — the stager's output
-#: verbatim (``python tools/evidence_age.py --stage`` against the
-#: committed r01-r13 artifacts). ZERO queue-jumpers: round 13 changed
-#: no registered plan's text (the only plans/ diff was a q26
-#: docstring), so the window was pure rule output: (1) the 38
-#: remaining r07-evidence rows in age-then-registration order; (2) 12
-#: backfill from the oldest r08 hash-greens. After this window landed,
-#: no query's driver evidence predated r08.
-ROUND14_HEAD: tuple[str, ...] = (
-    # (1) the 38 r07-evidence rows, age order
-    "s23_map_higher_order",
-    "dq10_order_reconciliation",
-    "q23_null_safe_join",
-    "m5_image_decode_stats",
-    "m6_audio_decode_stats",
-    "d60_realized_vol_jump",
-    "d61_tick_rule_imbalance",
-    "d62_var_backtest",
-    "a28_weighted_median",
-    "l60_simhash_dedup_retention",
-    "l61_containment_dedup",
-    "q24_lateral_subquery",
-    "q25_limit_offset",
-    "io18_dynamic_partition_overwrite",
-    "dq11_volume_anomaly",
-    "dq12_winsorized_stats",
-    "d63_fifo_realized_pnl",
-    "d64_unrealized_pnl",
-    "w9_ignore_nulls_navigation",
-    "w10_time_range_frame",
-    "w11_halo_parallel_time_window",
-    "s24_try_arithmetic",
-    "s25_calendar_arithmetic",
-    "d65_spearman_corr",
-    "d66_adjusted_close",
-    "d67_rolling_beta",
-    "l62_bm25_topk",
-    "l64_quality_threshold_sweep",
-    "d68_tracking_error",
-    "d69_roll_spread",
-    "d70_variance_ratio",
-    "d71_rfm_segmentation",
-    "l63_pmi_collocations",
-    "d72_touch_attribution",
-    "d73_markov_transitions",
-    "l7_minhash_lsh_candidates",
-    "l8_simhash_fingerprints",
-    "m4_modality_accounting",
-    # (2) backfill: the 12 oldest r08 hash-greens (weak/no_oracle
-    # rows skipped — they rotate with their round's main body)
-    "t6_windowed_topk_trending",
-    "q26_lateral_topk",
-    "d75_curve_interpolation",
-    "d76_settlement_dates",
-    "d77_volatility_cone",
-    "io19_zstd_parquet_roundtrip",
-    "d78_parametric_portfolio_var",
-    "d79_cusum_changepoint",
-    "d80_lead_lag_xcorr",
-    "d81_portfolio_turnover",
-    "d82_calendar_effects",
-    "w12_streak_islands",
-)
-
-
-#: ROUND-15 HEAD PIN (round-14 verdict order #2): evidence-freshness
-#: rotation, seventh window — the stager's output verbatim
-#: (``python tools/evidence_age.py --stage`` against the committed
-#: r01-r14 artifacts; tests/test_evidence_stage.py's exactness clause
-#: pins the reproduction while r14 is the newest artifact). ZERO
-#: queue-jumpers this round: neither round 13 nor round 14 changed any
-#: registered plan's text (the round-14 package diffs are
-#: plan_audit.py / spelling.py / registry.py pins only), so the window
-#: is pure rule output. Composition: (1) the 36 remaining r08-evidence
-#: rows in age-then-registration order; (2) 14 backfill from the
-#: oldest r09 hash-greens (weak/``no_oracle`` rows skipped by the
-#: standing backfill rule — they rotate with their round's main
-#: body). After this window lands: no query's driver evidence
-#: predates r09 (verify: python tools/evidence_age.py --check).
-ROUND15_HEAD: tuple[str, ...] = (
+#: The driver's correctness harness checks the first 50 entries of
+#: queries() each round, so this pin decides which plans earn fresh
+#: driver evidence. Its body is the output of
+#: ``python tools/evidence_age.py --stage`` (oldest evidence first,
+#: then hash-green backfill); to rotate, paste the new output over it.
+DRIVER_WINDOW: tuple[str, ...] = (
     # (1) the 36 r08-evidence rows, age order
     "a29_moment_shape_stats",
     "a30_bitmap_distinct",
@@ -752,133 +220,12 @@ ROUND15_HEAD: tuple[str, ...] = (
 )
 
 
-#: Historical round-8 window (superseded by ROUND9_HEAD; kept so the
-#: rotation ledger stays in code — all 50 rows landed in
-#: CORRECTNESS_r08.json: 48 hash-green, a8/a12 ``no_oracle`` by
-#: design).
-ROUND8_HEAD: tuple[str, ...] = (
-    # (1) round-6 spill — oldest never-checked debt
-    "t6_windowed_topk_trending",
-    "q26_lateral_topk",
-    "d75_curve_interpolation",
-    "d76_settlement_dates",
-    "d77_volatility_cone",
-    "io19_zstd_parquet_roundtrip",
-    # (1 cont.) round-7 additions, registration order
-    "d78_parametric_portfolio_var",
-    "d79_cusum_changepoint",
-    "d80_lead_lag_xcorr",
-    "d81_portfolio_turnover",
-    "d82_calendar_effects",
-    "w12_streak_islands",
-    "a29_moment_shape_stats",
-    "a30_bitmap_distinct",
-    "dq13_completeness_grid",
-    "dq14_staleness",
-    "l65_minhash_calibration",
-    "l66_ngram_coverage_curve",
-    "q27_bag_set_ops",
-    "q28_row_value_in_subquery",
-    "m7_image_tiling",
-    "d83_hurst_rs",
-    "s26_binary_encoding",
-    "io20_multiline_csv",
-    "u14_apply_in_arrow",
-    "d84_information_coefficient",
-    "g6_kcore_peel",
-    "io21_nested_json_roundtrip",
-    "a31_ordered_set_aggregates",
-    "l67_embedding_norm_audit",
-    "u15_pandas_udaf_window",
-    "d85_capture_ratios",
-    "m8_audio_framing",
-    "d86_volume_profile",
-    "dq15_near_duplicate_events",
-    "d87_cointegration_adf",
-    "d88_overnight_intraday",
-    "io22_tsv_dialect_roundtrip",
-    "l68_dedup_cluster_profile",
-    "d89_sign_autocorrelation",
-    "io23_parquet_merge_schema",
-    "l69_bpe_pair_stats",
-    "d90_cross_sectional_momentum",
-    "dq16_sequence_audit",
-    "l70_lsh_precision_recall",
-    "w13_ratio_to_report",
-    "q29_not_in_null_trap",
-    # (2) spare slots: oldest driver evidence re-proofs
-    "a8_approx_count_distinct",
-    "a12_freq_items_crosstab",
-    "t3_session_window_native",
-)
-
-#: Historical round-7 window (superseded by ROUND8_HEAD; kept so the
-#: rotation ledger stays in code — every name here is hash-green in
-#: CORRECTNESS_r07.json).
-ROUND7_HEAD: tuple[str, ...] = (
-    # (1) wave-2 remainder — displaced from the round-6 window
-    "u12_pandas_api_on_spark",
-    "a26_count_min_sketch",
-    "a27_transpose",
-    "t5_late_data_accounting",
-    "dq9_referential_integrity",
-    "u13_iter_pandas_udf",
-    "io17_text_roundtrip",
-    "s20_url_functions",
-    "s21_data_protection",
-    "s22_outer_explode",
-    "s23_map_higher_order",
-    "dq10_order_reconciliation",
-    "q23_null_safe_join",
-    # (2) tail-block orphans — oldest never-checked debt
-    "t4_dynamic_session_window",
-    "m4_modality_accounting",
-    # (3) first HASH rows for the upgraded l7/l8 oracles
-    "l7_minhash_lsh_candidates",
-    "l8_simhash_fingerprints",
-    # (4) round-6 additions, registration order, filling to 50
-    "m5_image_decode_stats",
-    "m6_audio_decode_stats",
-    "d60_realized_vol_jump",
-    "d61_tick_rule_imbalance",
-    "d62_var_backtest",
-    "a28_weighted_median",
-    "l60_simhash_dedup_retention",
-    "l61_containment_dedup",
-    "q24_lateral_subquery",
-    "q25_limit_offset",
-    "io18_dynamic_partition_overwrite",
-    "dq11_volume_anomaly",
-    "dq12_winsorized_stats",
-    "d63_fifo_realized_pnl",
-    "d64_unrealized_pnl",
-    "w9_ignore_nulls_navigation",
-    "w10_time_range_frame",
-    "w11_halo_parallel_time_window",
-    "s24_try_arithmetic",
-    "s25_calendar_arithmetic",
-    "d65_spearman_corr",
-    "d66_adjusted_close",
-    "d67_rolling_beta",
-    "l62_bm25_topk",
-    "l64_quality_threshold_sweep",
-    "d68_tracking_error",
-    "d69_roll_spread",
-    "d70_variance_ratio",
-    "d71_rfm_segmentation",
-    "l63_pmi_collocations",
-    "d72_touch_attribution",
-    "d73_markov_transitions",
-    "d74_kaplan_meier",
-)
-
-
 def _rotated(d: dict) -> dict:
-    """Head-pinned order: ROUND15_HEAD names first (in tuple order),
+    """Head-pinned order: DRIVER_WINDOW names first (in tuple order),
     everything else in registration order. Names in the pin that are
     absent from ``d`` (e.g. oracle-less queries when reordering
     ``_ORACLES``) are skipped."""
-    head = [n for n in ROUND15_HEAD if n in d]
+    head = [n for n in DRIVER_WINDOW if n in d]
     head_set = set(head)
     return {
         n: d[n] for n in (*head, *(k for k in d if k not in head_set))

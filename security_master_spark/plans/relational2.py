@@ -2,10 +2,6 @@
 (new in Spark 4) and observed metrics (`df.observe` — QA counters that
 piggyback on the query's own pass, the production observability
 surface).
-
-Registered past the driver's ~50-entry correctness cap on purpose
-(see plans/registry.py) — driver rows come in round 5; until then the
-local oracle mirror (tests/test_correctness.py) proves them.
 """
 
 from __future__ import annotations

@@ -2,10 +2,6 @@
 syntax (`|>`, new in Spark 4) and parameterized SQL (named-argument
 binding) — the two query-authoring surfaces a platform exposes to
 analysts and to applications respectively.
-
-Registered past the driver's ~50-entry correctness cap on purpose
-(see plans/registry.py) — driver rows come in round 5; until then the
-local oracle mirror (tests/test_correctness.py) proves them.
 """
 
 from __future__ import annotations

@@ -1,8 +1,5 @@
 """Round-6 SQL-surface batch (SURVEY.md §2.9): LATERAL correlated
 subqueries and LIMIT/OFFSET pagination.
-
-Registered as round-7 rotation candidates (plans/registry.py); until
-their driver rows land, the local oracle mirror proves them.
 """
 
 from __future__ import annotations

@@ -2,8 +2,6 @@
 set operations — INTERSECT ALL / EXCEPT ALL, the duplicate-preserving
 semantics q8's set-flavored ops cannot express — and multi-column
 (row-value) IN subqueries.
-
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
 """
 
 from __future__ import annotations

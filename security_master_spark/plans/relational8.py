@@ -1,8 +1,6 @@
 """Round-7 SQL-surface batch 2 (SURVEY.md §2.9): the NOT IN vs NOT
 EXISTS null trap — three-valued-logic semantics certified side by
 side on a NULL-bearing subquery.
-
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
 """
 
 from __future__ import annotations

@@ -1,8 +1,6 @@
 """Round-7 scalar batch (SURVEY.md §2.8): binary/text encodings —
 base64, hex, codepoint functions, byte lengths, and the
 encode→base64→decode roundtrip proved in-row.
-
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
 """
 
 from __future__ import annotations

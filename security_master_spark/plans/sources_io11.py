@@ -1,8 +1,6 @@
 """Round-7 IO batch (SURVEY.md §2.1): multiline CSV — quoted fields
 containing embedded newlines and quotes surviving a write→read
 roundtrip (`multiLine`), the classic real-world CSV hazard.
-
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
 """
 
 from __future__ import annotations

@@ -2,8 +2,6 @@
 array-of-struct documents (an order with its line items) surviving
 write → schema-first read → re-flatten, the denormalized-document
 interchange shape io2's flat JSON never exercises.
-
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
 """
 
 from __future__ import annotations

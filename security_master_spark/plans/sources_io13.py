@@ -2,8 +2,6 @@
 tab separator, custom NULL sentinel, and a custom escape character
 surviving a write→read roundtrip; the "other CSV dialect" every
 real-world ingest eventually meets.
-
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
 """
 
 from __future__ import annotations

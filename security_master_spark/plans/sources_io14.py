@@ -2,8 +2,6 @@
 two generations of files with DIFFERENT schemas in one dataset,
 unified by ``mergeSchema`` (io7 evolves the declared read schema;
 this exercises footer-level union across heterogeneous files).
-
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
 """
 
 from __future__ import annotations

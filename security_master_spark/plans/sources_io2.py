@@ -1,6 +1,5 @@
 """Round-3 source/sink addition: schema evolution across parquet
-batches (SURVEY.md §2.1). Separate module from plans/sources_io.py for
-driver-evidence scheduling (see plans/registry.py).
+batches (SURVEY.md §2.1).
 """
 
 from __future__ import annotations

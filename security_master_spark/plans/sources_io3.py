@@ -1,8 +1,5 @@
 """Round-4 source/sink candidates (SURVEY.md §2.1): CDC snapshot diff
 (time-travel + changelog over the copy-on-write MERGE store).
-
-Registered AFTER the round-3 head block (plans/registry.py): rotates
-into the driver's correctness window next round.
 """
 
 from __future__ import annotations

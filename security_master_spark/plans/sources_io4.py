@@ -1,8 +1,4 @@
 """Round-4 source/sink candidates (SURVEY.md §2.1): ORC round-trip.
-
-Registered past the driver's ~50-entry correctness cap on purpose
-(see plans/registry.py) — driver rows come in round 4; until then the
-local oracle mirror (tests/test_correctness.py) proves them.
 """
 
 from __future__ import annotations

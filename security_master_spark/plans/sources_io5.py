@@ -1,9 +1,5 @@
 """Round-5 source/sink candidates (SURVEY.md §2.1): compressed-codec
 roundtrip.
-
-Registered past the driver's ~50-entry correctness cap on purpose
-(see plans/registry.py) — driver rows come in round 5; until then the
-local oracle mirror (tests/test_correctness.py) proves them.
 """
 
 from __future__ import annotations

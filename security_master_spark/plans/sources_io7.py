@@ -2,10 +2,6 @@
 round-trip — Spark 4 ships the (formerly spark-xml) XML data source
 natively, and enterprise feeds (ISO 20022, FIXML, vendor security
 masters) still arrive as XML.
-
-Registered past the driver's ~50-entry correctness cap on purpose
-(see plans/registry.py) — driver rows come in round 5; until then the
-local oracle mirror (tests/test_correctness.py) proves them.
 """
 
 from __future__ import annotations

@@ -7,10 +7,6 @@ form; t5 certifies the WATERMARK side — which rows a
 streaming/jobs.py proves the live behavior (rate source + memory
 sink); this query pins the exact arithmetic against the SQL oracle so
 the drop rule itself is value-checked, not just exercised.
-
-Registered past the driver's ~50-entry correctness cap on purpose
-(see plans/registry.py) — driver rows come in round 5; until then the
-local oracle mirror (tests/test_correctness.py) proves them.
 """
 
 from __future__ import annotations

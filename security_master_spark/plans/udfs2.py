@@ -1,9 +1,5 @@
 """Round-5 UDF-surface candidates (SURVEY.md §2.13): the Arrow-native
 batch path (``mapInArrow``).
-
-Registered past the driver's ~50-entry correctness cap on purpose
-(see plans/registry.py) — driver rows come in round 5; until then the
-local oracle mirror (tests/test_correctness.py) proves them.
 """
 
 from __future__ import annotations

@@ -4,10 +4,6 @@ table-valued (RETURNS TABLE) — the Spark 4 surface that lets users
 package reusable logic WITHOUT leaving the JVM: a SQL UDF inlines
 into the calling plan at analysis time, so unlike u1/u2's Python
 crossings it costs nothing at run time.
-
-Registered past the driver's ~50-entry correctness cap on purpose
-(see plans/registry.py) — driver rows come in round 5; until then the
-local oracle mirror (tests/test_correctness.py) proves them.
 """
 
 from __future__ import annotations

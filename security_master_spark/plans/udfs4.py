@@ -3,10 +3,6 @@ pandas API on Spark (`pyspark.pandas`) — the drop-in pandas dialect
 that compiles to the same Catalyst plans as the DataFrame API, so a
 pandas-fluent user of the reference can keep their idioms and still
 get distributed execution.
-
-Registered past the driver's ~50-entry correctness cap on purpose
-(see plans/registry.py) — driver rows come in round 5; until then the
-local oracle mirror (tests/test_correctness.py) proves them.
 """
 
 from __future__ import annotations

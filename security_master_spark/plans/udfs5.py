@@ -7,10 +7,6 @@ that sees every batch of its partition, which is how you amortize an
 expensive one-time setup (load a tokenizer/model/lookup ONCE per
 task, not once per batch). u5's mapInPandas iterates DataFrames; this
 is the column-level sibling with scalar-UDF call syntax.
-
-Registered past the driver's ~50-entry correctness cap on purpose
-(see plans/registry.py) — driver rows come in round 5; until then the
-local oracle mirror (tests/test_correctness.py) proves them.
 """
 
 from __future__ import annotations

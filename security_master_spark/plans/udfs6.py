@@ -1,8 +1,6 @@
 """Round-7 UDF batch (SURVEY.md §2.13): ``applyInArrow`` — Spark 4's
 Arrow-native grouped-map (the pandas-free sibling of u4's
 applyInPandas), running pyarrow.compute C++ kernels per group.
-
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
 """
 
 from __future__ import annotations

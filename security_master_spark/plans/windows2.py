@@ -10,10 +10,6 @@ law. w8's GROUPS frame is unimplemented in BOTH engines (DuckDB
 parser-verified), so its oracle derives the semantics by a third
 route (LAG/LEAD over collapsed groups). SURVEY.md's
 engine-limitations note points here.
-
-Registered past the driver's ~50-entry correctness cap on purpose
-(see plans/registry.py) — driver rows come in round 5; until then the
-local oracle mirror (tests/test_correctness.py) proves them.
 """
 
 from __future__ import annotations

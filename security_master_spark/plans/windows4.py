@@ -1,8 +1,6 @@
 """Round-7 window batch (SURVEY.md §2.5): gaps-and-islands streak
 detection — the canonical "consecutive runs" window idiom that no
 frame clause can express directly.
-
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
 """
 
 from __future__ import annotations

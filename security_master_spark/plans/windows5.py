@@ -1,8 +1,6 @@
 """Round-7 window batch 2 (SURVEY.md §2.5): ratio-to-report — the
 share-of-total window (Oracle's RATIO_TO_REPORT), spelled as a
 windowed sum division with multi-level shares in one pass.
-
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
 """
 
 from __future__ import annotations

@@ -170,3 +170,14 @@ def test_zstd_roundtrip_footer_actually_says_zstd(spark, sf_dir):
             for c in range(meta.num_columns):
                 codec = meta.row_group(rg).column(c).compression
                 assert codec == "ZSTD", f"{f}: {codec}"
+
+
+def test_load_table_leaves_the_cache_manager_empty(spark, sf_dir, monkeypatch):
+    # load_table must never cache a fixture into the caller's session,
+    # whatever the environment: a cached scan hides pruning and serves
+    # stale rows after the file is rewritten in place
+    monkeypatch.setenv("SPARK_GRAFT_CACHE", "1")
+    spark.catalog.clearCache()
+    for name in ("region", "events"):
+        load_table(spark, sf_dir, name)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

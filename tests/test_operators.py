@@ -413,9 +413,8 @@ def test_connected_components_chain_and_islands(spark):
 
 def test_python_xxh64_matches_spark_xxhash64(spark):
     """The in-process hyperplane hash (functions/xxh64.py) must be
-    bit-exact with the JVM expression it replaces — otherwise the
-    literal sign matrices silently diverge from the inline
-    ``random_hyperplane_cells`` form."""
+    bit-exact with Spark's ``xxhash64``: the ANN sign matrices and the
+    l20 oracle's literal hyperplanes are both defined by it."""
     from security_master_spark.functions.xxh64 import xxhash64_ints
 
     rows = [

@@ -173,46 +173,42 @@ def test_every_registered_callable_is_invocable():
     )
 
 
-#: the round-15 driver window: pinned explicitly in
-#: registry.ROUND15_HEAD (queries()/oracle_sql() reorder the dict so
-#: these 50 are the first 50 the driver sees). ZERO queue-jumpers
-#: (rounds 13-14 changed no registered plan text): the 36 remaining
-#: r08-evidence rows + the 14 oldest r09 hash-greens — after this
-#: window no query's driver evidence predates r09.
-from security_master_spark.plans.registry import ROUND15_HEAD as _ROUND15_HEAD
+#: the driver window: pinned explicitly in registry.DRIVER_WINDOW
+#: (queries()/oracle_sql() reorder the dict so these 50 are the first
+#: 50 the driver sees).
+from security_master_spark.plans.registry import DRIVER_WINDOW
 
-#: the guarded ROUND-16 wave: empty at rotation time — every
-#: registered name has driver evidence (CORRECTNESS_r01-r14 union
-#: covers all 333). Any round-15 addition must register its name here;
+#: never-driver-checked names awaiting a later window: empty while the
+#: CORRECTNESS_r*.json union covers every registered query. A new
+#: query must register its name here until its first driver row lands;
 #: test_never_checked_queries_all_have_a_documented_wave enforces
-#: that no never-checked name lives outside ROUND15_HEAD ∪ this set.
-_ROUND16_REMAINDER: set[str] = set()
+#: that no never-checked name lives outside DRIVER_WINDOW ∪ this set.
+_AWAITING_WINDOW: set[str] = set()
 
 
 def test_registration_order_puts_unproven_queries_first():
     """The driver's correctness harness checks at most ~50 registry
-    entries per round in registration order (rounds 1-14 all stopped
-    at exactly 50). Round-15 rotation: the pinned ROUND15_HEAD must BE
-    the first 50 entries of queries(), in pin order — nothing else may
-    spend a cap slot."""
+    entries per round in registration order. The pinned DRIVER_WINDOW
+    must BE the first 50 entries of queries(), in pin order — nothing
+    else may spend a cap slot."""
     names = list(_QUERIES)
-    assert len(_ROUND15_HEAD) == 50
-    assert len(set(_ROUND15_HEAD)) == 50
-    assert names[:50] == list(_ROUND15_HEAD), (
+    assert len(DRIVER_WINDOW) == 50
+    assert len(set(DRIVER_WINDOW)) == 50
+    assert names[:50] == list(DRIVER_WINDOW), (
         f"head-50 drift: missing="
-        f"{sorted(set(_ROUND15_HEAD) - set(names[:50]))} "
-        f"extra={sorted(set(names[:50]) - set(_ROUND15_HEAD))}"
+        f"{sorted(set(DRIVER_WINDOW) - set(names[:50]))} "
+        f"extra={sorted(set(names[:50]) - set(DRIVER_WINDOW))}"
     )
 
 
 def test_never_checked_queries_all_have_a_documented_wave():
-    """Wave-completeness guard (round-5 verdict, 'What's wrong' #3):
-    the head-pin test above guards WHO spends the current window, but
-    not whether the rotation plan's tail is complete — that gap is how
-    m4_modality_accounting silently fell out of every wave. Recompute
-    the never-driver-checked set from the committed CORRECTNESS_r*.json
-    evidence files and assert every member is either in the current
-    head or in the literal round-15 remainder list."""
+    """Wave-completeness guard: the head-pin test above guards WHO
+    spends the current window, but not whether every never-checked
+    query is scheduled — that gap is how m4_modality_accounting once
+    silently fell out of every wave. Recompute the never-driver-checked
+    set from the committed CORRECTNESS_r*.json evidence files and
+    assert every member is either in the current window or in the
+    literal awaiting list."""
     import glob
     import json
     import os
@@ -223,11 +219,11 @@ def test_never_checked_queries_all_have_a_documented_wave():
         with open(path, encoding="utf-8") as f:
             ever_checked.update(json.load(f).keys())
     never = set(_QUERIES) - ever_checked
-    orphans = never - set(_ROUND15_HEAD) - _ROUND16_REMAINDER
+    orphans = never - set(DRIVER_WINDOW) - _AWAITING_WINDOW
     assert not orphans, (
         f"never-driver-checked queries outside every documented "
-        f"rotation wave: {sorted(orphans)} — add them to the round-16 "
-        f"remainder (tests/test_plans.py + registry.py comment)"
+        f"window: {sorted(orphans)} — add them to _AWAITING_WINDOW "
+        f"(tests/test_plans.py)"
     )
 
 

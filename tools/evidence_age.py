@@ -1,8 +1,8 @@
 """Evidence-age ledger: for every registered query, the latest
 CORRECTNESS_r*.json round that carries a row for it — the input to
-the evidence-freshness rotation (ROUND{8,9,10}_HEAD in
+the evidence-freshness rotation (``DRIVER_WINDOW`` in
 plans/registry.py). Prints the histogram and the oldest-first
-candidate list the next head pin should be built from.
+candidate list the next pin should be built from.
 
 Usage: python tools/evidence_age.py [--max-round N] [--limit K] [--check]
                                     [--stage [K]]
@@ -16,7 +16,7 @@ Usage: python tools/evidence_age.py [--max-round N] [--limit K] [--check]
                     comment can never drift from the committed
                     artifacts)
     --stage [K]     print the NEXT rotation window (default 50 rows)
-                    as a ready-to-paste ROUND*_HEAD tuple, computed
+                    as a ready-to-paste DRIVER_WINDOW tuple, computed
                     from the committed artifacts by the standing
                     rules (rounds 10-12): the main body is every row
                     whose evidence sits at the oldest round on disk,
@@ -165,9 +165,8 @@ def main(argv: list[str]) -> None:
 
     if stage is not None:
         newest = max(latest.values(), default=0)
-        # at round-N start the artifacts run through r(N-1), so the
-        # window being pinned is ROUND N (e.g. artifacts through r11
-        # -> ROUND12_HEAD, which is how round 12 derived its pin)
+        # artifacts through r(N-1) stage round N's window, so its
+        # queue-jumpers are registry.ROUND{N}_QUEUE_JUMPERS
         from security_master_spark.plans import registry as _registry
 
         jumpers = tuple(
@@ -184,7 +183,7 @@ def main(argv: list[str]) -> None:
             f"from the committed CORRECTNESS_r*.json (newest "
             f"r{newest:02d}) by tools/evidence_age.py --stage."
         )
-        print(f"ROUND{newest + 1}_HEAD: tuple[str, ...] = (")
+        print("DRIVER_WINDOW: tuple[str, ...] = (")
         if jump:
             print(f"    # (0) queue-jumpers: oracle/plan changed in "
                   f"round {newest + 1 - 1} after their last evidence "

@@ -10,8 +10,8 @@ Two jobs, one tool:
 2. Without ``--no-time``, times each named query with the bench.py
    methodology (warm-up, noop sink, inter-query System.gc, N
    interleaved passes, report the minimum) in THIS process — run the
-   tool once per measurement so every invocation is a fresh JVM, the
-   bench_audit.py isolation discipline.
+   tool once per measurement so every invocation is a fresh JVM (the
+   isolation discipline of PLANS.md "Fresh-session bench audit").
 
 Usage:
     python tools/opt_probe.py --explain plans/r15 --suffix before \

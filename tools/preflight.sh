@@ -50,23 +50,4 @@ fi
 echo "== preflight: evidence-age histogram + rolling freshness bound =="
 python "$REPO/tools/evidence_age.py" --limit 0 --check
 
-echo "== preflight: registry smoke (callable signatures + oracle templates) =="
-python - <<'EOF'
-import inspect, re, sys
-sys.path.insert(0, ".")
-from security_master_spark.plans import registry
-q, o = registry.queries(), registry.oracle_sql()
-def _sig_ok(f):
-    try:
-        inspect.signature(f).bind("spark", "sf_dir")
-        return True
-    except TypeError:
-        return False
-bad = [n for n, f in q.items() if not _sig_ok(f)]
-tmpl = [n for n, s in o.items() if re.search(r"\{[A-Za-z_][A-Za-z0-9_]*\}", s)]
-assert not bad, f"uncallable registrations: {bad}"
-assert not tmpl, f"unexpanded oracle templates: {tmpl}"
-print(f"registry ok: {len(q)} queries, {len(o)} oracles")
-EOF
-
 echo "== preflight: GREEN =="
