@@ -180,261 +180,3 @@ def asof_join_bucketed(
         tiebreak=tiebreak,
     )
     return out.drop("__b")
-
-
-#: Default bound on the cross-bucket carry table that
-#: :func:`asof_carry_bucketed` force-broadcasts: one row per distinct
-#: probe (key, bucket) ≈ keys × span/bucket_width. At 2M rows of
-#: (keys + bucket id + a few carried columns) the broadcast is
-#: O(100 MB) — comfortably inside Spark's 8 GB broadcast ceiling but
-#: already a deliberate driver-memory decision; callers on big-driver
-#: clusters can raise it, or pass ``None`` to disable the probe.
-DEFAULT_MAX_CARRY_ROWS = 2_000_000
-
-
-def asof_carry_bucketed(
-    probes: DataFrame,
-    anchors: DataFrame,
-    on: Sequence[str],
-    ts: str,
-    value_cols: Sequence[str],
-    bucket_width: int,
-    max_carry_rows: int | None = DEFAULT_MAX_CARRY_ROWS,
-) -> DataFrame:
-    """EXACT backward as-of carry, parallel in (key, time-bucket): for
-    each probe row, attach — per column of ``value_cols``,
-    independently — the LAST NON-NULL anchor value at ``anchor.ts <=
-    probe.ts`` within the probe's ``on`` key group (anchors at exactly
-    the probe ``ts`` included). Matches ``last(v, ignorenulls=True)
-    OVER (PARTITION BY on ORDER BY ts, is_anchor DESC ROWS UNBOUNDED
-    PRECEDING)`` over the anchor∪probe union — the serial
-    union-and-carry merge — for ANY null pattern, with no
-    one-task-per-key ceiling and, unlike :func:`asof_join_bucketed`,
-    no lost matches when anchor gaps exceed the bucket width.
-
-    Decomposition (each piece reconstructs "last non-null", which
-    composes associatively per column):
-
-    1. WITHIN-BUCKET: union anchors and probes inside each (key,
-       ``floor(ts / bucket_width)``) bucket and run the carry window
-       there — parallel in O(keys × buckets) tasks.
-    2. CROSS-BUCKET: collapse anchors to one row per (key, bucket)
-       holding each column's last non-null value, then carry those
-       summaries key-serially — over the COLLAPSED table, so the
-       serial pass is O(active buckets), not O(rows) — excluding the
-       probe's own bucket (step 1 owns it).
-    3. Per column: ``coalesce(within_bucket, cross_bucket)``.
-
-    Contracts: ``ts`` is exact-integer (µs — double bucket math at
-    epoch magnitude is the t3/t4 oracle hazard) and NON-NULL on both
-    sides; anchors are unique per (key, ``ts``) (the standard as-of
-    contract — duplicate anchors make "the last anchor" engine-
-    arbitrary). NULL values in ``on`` keys are first-class groups
-    (null-safe joins throughout — the round-10 ``_nullsafe_attach``
-    lesson). The cross-bucket carry table is broadcast back onto the
-    probes: it holds one row per distinct probe (key, bucket), so pick
-    ``bucket_width`` such that keys × span/bucket_width stays
-    driver-broadcastable (the natural choice — the caller's lookback
-    interval — gives span/lookback buckets). That contract is
-    ENFORCED, not advisory (round-11 verdict), and the guard is FUSED
-    into the plan (round-12 guard-cost study, PLANS.md: an eager
-    count action costs an extra input scan per call, +0.8-1.1 s at
-    the 6M corpus, and the persist-reclaim variant measured worse):
-    a global count window over the small carry table plus an in-plan
-    ``raise_error`` abort the job at the FIRST ACTION — surfacing as
-    a Spark runtime exception carrying this operator's message, not
-    a call-time ``ValueError`` — before the broadcast is built, when
-    the carry table exceeds ``max_carry_rows`` (default
-    :data:`DEFAULT_MAX_CARRY_ROWS`; ``None`` disables and removes
-    the count window entirely). The fix for a raise is a wider
-    ``bucket_width`` (each doubling halves the carry rows).
-
-    Reserved names: ``_bkt``/``_is_a``/``_n``, the per-column scratch
-    ``_in_<v>``/``_x_<v>``, and the attach-side ``_r_<key>``/
-    ``_r__bkt`` are internal; inputs carrying them — or probe extras
-    sharing a ``value_cols`` name (duplicate columns in the anchor∪
-    probe union) — raise ``ValueError`` up front (the
-    distributed_cumsum guard convention) instead of silently
-    overwriting.
-
-    Returns ``probes``' columns plus one carried column per
-    ``value_cols`` entry (NULL when no qualifying anchor exists).
-
-    Scale rationale (round-11, PLANS.md): this is the carry half of
-    trailing_interval_sum's distributed path — the cum-prefix half
-    parallelized in round 10 (distributed_cumsum), after which the
-    serial per-key carry window capped the gain at Amdahl's bound
-    (measured 1.34× one-key / 0.84× balanced). With the carry also
-    bucket-parallel, no per-key serial pass over O(rows) remains.
-    """
-    from security_master_spark.operators.rolling import _nullsafe_attach
-
-    on = list(on)
-    vals = list(value_cols)
-    if not vals:
-        raise ValueError(
-            "asof_carry_bucketed: value_cols must be non-empty"
-        )
-    bw_i = int(bucket_width)
-    if bw_i <= 0:
-        raise ValueError(
-            f"asof_carry_bucketed: bucket_width must be positive, got "
-            f"{bucket_width}"
-        )
-    reserved = (
-        {"_bkt", "_is_a"}
-        | {f"_in_{v}" for v in vals}
-        | {f"_x_{v}" for v in vals}
-        | {f"_r_{c}" for c in (*on, "_bkt")}
-    )
-    bad = sorted((set(probes.columns) | {*on, ts, *vals}) & reserved)
-    if bad:
-        raise ValueError(
-            f"asof_carry_bucketed: input columns collide with internal "
-            f"scratch columns: {bad} — rename them before calling"
-        )
-    # _n is the fused guard's count column on the INTERNAL cross
-    # table, which carries only join keys and value columns — so only
-    # those surfaces can collide (a probe passthrough column named _n
-    # never reaches it and stays legal). Checked even when the guard
-    # is off, so validity never depends on the bound (round-12
-    # review: a join key named _n was silently replaced by the count
-    # and then dropped).
-    if "_n" in {*on, *vals}:
-        raise ValueError(
-            "asof_carry_bucketed: '_n' among the join keys or "
-            "value_cols collides with the fused broadcast guard's "
-            "count column — rename it before calling"
-        )
-    extras = [c for c in probes.columns if c not in {*on, ts}]
-    dup = sorted(set(extras) & set(vals))
-    if dup:
-        raise ValueError(
-            f"asof_carry_bucketed: probe columns share value_cols "
-            f"names: {dup} — the anchor∪probe union would carry "
-            f"duplicate columns; rename or drop them on the probe side"
-        )
-    if "`" in ts:
-        raise ValueError(
-            f"asof_carry_bucketed: ts column name may not contain "
-            f"backticks: {ts!r}"
-        )
-    # exact integer floor-division bucket id: pmod is non-negative, so
-    # the subtraction lands exactly on a bucket multiple and `div`
-    # keeps the quotient in LONG — exact for ALL longs, unlike the
-    # double-division spelling this replaced (|ts| ≥ 2^53 µs would
-    # silently round to a neighboring bucket)
-    bkt = F.expr(f"(`{ts}` - pmod(`{ts}`, {bw_i})) div {bw_i}")
-
-    a = anchors.select(*on, ts, *vals).withColumn("_bkt", bkt)
-    p = probes.withColumn("_bkt", bkt)
-    vtype = {v: a.schema[v].dataType for v in vals}
-
-    a_u = a.select(
-        *on, ts, "_bkt", F.lit(1).alias("_is_a"), *vals,
-        *[F.lit(None).cast(probes.schema[c].dataType).alias(c)
-          for c in extras],
-    )
-    p_u = p.select(
-        *on, ts, "_bkt", F.lit(0).alias("_is_a"),
-        *[F.lit(None).cast(vtype[v]).alias(v) for v in vals],
-        *extras,
-    )
-    w_in = (
-        Window.partitionBy(*on, "_bkt")
-        .orderBy(F.col(ts).asc(), F.col("_is_a").desc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    filled = (
-        a_u.unionByName(p_u)
-        .select(
-            *on, ts, "_bkt", "_is_a", *extras,
-            *[F.last(v, ignorenulls=True).over(w_in).alias(f"_in_{v}")
-              for v in vals],
-        )
-        .filter(F.col("_is_a") == 0)
-        .drop("_is_a")
-    )
-
-    # one row per (key, anchor bucket): each column's last non-null
-    summ = a.groupBy(*on, "_bkt").agg(
-        *[
-            F.max_by(v, F.when(F.col(v).isNotNull(), F.col(ts))).alias(v)
-            for v in vals
-        ]
-    )
-    pb = p.select(*on, "_bkt").distinct()
-    s_u = summ.select(*on, "_bkt", F.lit(1).alias("_is_a"), *vals)
-    pb_u = pb.select(
-        *on, "_bkt", F.lit(0).alias("_is_a"),
-        *[F.lit(None).cast(vtype[v]).alias(v) for v in vals],
-    )
-    # probes sort BEFORE summaries at equal bucket (_is_a ASC): the
-    # probe's own bucket is excluded here — step 1 owns it
-    w_x = (
-        Window.partitionBy(*on)
-        .orderBy(F.col("_bkt").asc(), F.col("_is_a").asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cross = (
-        s_u.unionByName(pb_u)
-        .select(
-            *on, "_bkt", "_is_a",
-            *[F.last(v, ignorenulls=True).over(w_x).alias(f"_x_{v}")
-              for v in vals],
-        )
-        .filter(F.col("_is_a") == 0)
-        .drop("_is_a")
-    )
-    if max_carry_rows is not None:
-        # Broadcastability guard, FUSED into the plan (round 12): the
-        # carry table below is force-broadcast, one row per distinct
-        # probe (key, bucket). A separate eager count action pays an
-        # extra input scan per call (+0.8-1.1 s at the 6M corpus) and
-        # the persist-reclaim variant measured WORSE (guard-cost study,
-        # PLANS.md) — so the check rides the main job instead: a
-        # global count window over the SMALL carry table (one extra
-        # single-partition exchange of ≤ carry rows) and an in-plan
-        # raise on the first action when it exceeds the bound. When
-        # the guard trips, the single-task window spills instead of
-        # the driver OOMing, and the broadcast build never starts.
-        # The raise surfaces as a SparkRuntimeException wrapping this
-        # message at the first action, not a call-time ValueError —
-        # the price of a zero-cost guard on a lazy engine.
-        #
-        # The guard wraps the _bkt JOIN KEY, not a value column: a
-        # value column is pruned — guard and all — whenever the
-        # consumer doesn't read it (caught by the round-12 review:
-        # .select() of a subset silently skipped the check), while
-        # the attach below always evaluates its join keys for every
-        # carry row when building the broadcast hash table.
-        w_n = Window.partitionBy()
-        cross = (
-            cross.withColumn("_n", F.count("*").over(w_n))
-            .withColumn(
-                "_bkt",
-                F.when(
-                    F.col("_n") > max_carry_rows,
-                    F.raise_error(F.format_string(
-                        "asof_carry_bucketed: cross-bucket carry table "
-                        "holds %d distinct (key, bucket) rows, over "
-                        f"max_carry_rows={max_carry_rows}; it is "
-                        "force-broadcast, so this plan is an OOM risk "
-                        "— widen bucket_width (each doubling halves "
-                        "the carry rows), or raise/disable "
-                        "max_carry_rows on a big-driver cluster",
-                        F.col("_n"),
-                    )),
-                ).otherwise(F.col("_bkt")),
-            )
-            .drop("_n")
-        )
-
-    out = _nullsafe_attach(filled, cross, [*on, "_bkt"])
-    return out.select(
-        *on, ts, *extras,
-        *[
-            F.coalesce(F.col(f"_in_{v}"), F.col(f"_x_{v}")).alias(v)
-            for v in vals
-        ],
-    )

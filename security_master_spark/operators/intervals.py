@@ -104,8 +104,8 @@ def near_duplicate_pairs(
 
     Shape (the d2 interval-join algebra): rows bucket by
     ``floor(ts / window_us)`` (exact integer ``div`` — correct for
-    all longs, the round-12 asof spelling); the probe side carries
-    each row under its own bucket AND the next, so every qualifying
+    all longs); the probe side carries each row under its own bucket
+    AND the next, so every qualifying
     pair co-locates in at least one bucket and the join is a pure
     EQUI-join on (keys, bucket) with the |Δt| predicate as a filter.
     LEAST/GREATEST + DISTINCT collapses the orientations a pair can

@@ -17,11 +17,6 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from security_master_spark.operators.asof import (
-    DEFAULT_MAX_CARRY_ROWS,
-    asof_carry_bucketed,
-)
-
 
 def _series_window(keys: Sequence[str], ts: str) -> Window:
     return Window.partitionBy(*keys).orderBy(ts)
@@ -38,81 +33,6 @@ def forward_fill(
     for c in cols:
         out = out.withColumn(c, F.last(c, ignorenulls=True).over(w))
     return out
-
-
-def forward_fill_bucketed(
-    df: DataFrame,
-    keys: Sequence[str],
-    ts: str,
-    cols: Sequence[str],
-    bucket_width: int,
-    max_carry_rows: int | None = DEFAULT_MAX_CARRY_ROWS,
-) -> DataFrame:
-    """Skew-proof, JVM-side forward fill — the third spelling of the
-    carry-forward family, chosen by regime:
-
-    - :func:`forward_fill` (above): the portable window form — one
-      ordered WindowExec task per key; right whenever every key's
-      history fits an executor.
-    - ``operators/scan.py:forward_fill_distributed``: the segmented
-      scan — parallel within a monster key, but mapInPandas (Python
-      workers) with a driver-side fold of chunk summaries.
-    - THIS: operators/asof.py:asof_carry_bucketed with every input
-      row as both anchor and probe — parallel in O(keys × buckets)
-      tasks, no per-key serial pass over O(rows), no Python workers,
-      no driver state. A probe's own row is an anchor at the same
-      timestamp and anchors win ties, so each row fills to its OWN
-      value when non-null, else the last earlier non-null — exactly
-      the ``last(ignorenulls)`` running window, per column. Measured
-      at the 6M-tick corpus (PLANS.md round-11 ffill study): 1.61×
-      vs the window form at 96% key skew and faster than the
-      segmented scan on BOTH shapes; 0.84× on balanced keys, where
-      the window form stays the right default.
-
-    Contracts (inherited from the carry): ``ts`` is exact-integer
-    (µs — convert timestamps with ``unix_micros`` first) and
-    non-null, and (keys, ``ts``) is UNIQUE — the window form's output
-    under equal-ts ties is intra-ts-order-dependent anyway, so the
-    unique-ts contract is where all three spellings agree. NULL keys
-    are first-class groups. Column order of ``df`` is preserved.
-
-    Choosing ``bucket_width``: every row is a probe here, so the
-    carry's cross-bucket table holds one row per distinct (key,
-    ``floor(ts / bucket_width)``) — force-broadcast, ≈ n_keys ×
-    span/bucket_width rows. Two constraints bound the width from both
-    sides: (a) broadcastability — keep n_keys × span/bucket_width
-    under the carry's ``max_carry_rows`` bound (defaults to
-    asof_carry_bucketed's
-    :data:`~security_master_spark.operators.asof.DEFAULT_MAX_CARRY_ROWS`,
-    whose in-plan guard aborts the first action instead of building
-    an OOM-class broadcast; pass ``None`` to disable); (b)
-    parallelism — at least
-    ~``defaultParallelism``
-    (key, bucket) cells so the within-bucket stage fills the cluster.
-    Constraint (a) bounds the width from BELOW —
-    ``bucket_width ≥ 2 * n_keys * span / max_carry_rows`` (the 2× is
-    headroom; each halving of the width doubles the carry rows) —
-    and (b) from above: ``bucket_width ≤ n_keys * span /
-    cluster_parallelism``. Any width between the two works; with few
-    keys start at ``span / defaultParallelism`` (the round-11
-    measured configurations used span/32-ish widths), with many keys
-    start at the lower bound. (The round-12 review caught the
-    previous formula here inverting constraint (a) — it divided span
-    by the MINIMUM-width term, recommending widths ~bound× too
-    narrow.) A width a few × the median per-key observation gap
-    stops mattering: past that, within-bucket windows dominate and
-    the cross-bucket carry is noise.
-    """
-    out = asof_carry_bucketed(
-        df.drop(*cols),
-        df.select(*keys, ts, *cols),
-        keys,
-        ts,
-        list(cols),
-        bucket_width,
-        max_carry_rows=max_carry_rows,
-    )
-    return out.select(*df.columns)
 
 
 def pct_change(

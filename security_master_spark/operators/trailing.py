@@ -27,19 +27,15 @@ subtraction is catastrophic cancellation; integer cents are not).
 Non-invertible trailing aggregates (MAX/MIN over a sliding interval)
 cannot difference prefixes — for those the halo-bucket rewrite
 (duplicate each row into its successor bucket, window per bucket,
-emit home rows) remains the right tool, now generalized in
-operators/rolling.py:rolling_rows_agg (ROWS frames, skew-proof).
+emit home rows) remains the right tool.
 
-Parallelism note: the window passes on the DEFAULT path are
-key-partitioned — one task per key value, which serializes under a
-dominant key. ``distributed_prefix=True`` (round 10 for the
-cum-prefix via operators/rolling.py:distributed_cumsum, round 11 for
-the boundary carry via operators/asof.py:asof_carry_bucketed) removes
-every per-key serial pass over O(rows); the only key-serial work left
-is the cross-bucket summary carry over O(active buckets) rows.
-Measured numbers live in PLANS.md (round-10 halo study; round-11
-carry study). The default stays False so the certified w11 plan is
-byte-for-byte unchanged.
+Parallelism note: both window passes are key-partitioned — one task
+per key value, which serializes under a dominant key. This portable
+form is the only spelling. A distributed variant (range-partitioned
+prefix sums plus a time-bucketed boundary carry) measured 0.60× on
+balanced keys and 1.77× only when one key held most rows; no
+registered query serves such a corpus (PLANS.md, "Trailing-interval
+carry study").
 """
 
 from __future__ import annotations
@@ -48,14 +44,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-from security_master_spark.operators.asof import (
-    DEFAULT_MAX_CARRY_ROWS,
-    asof_carry_bucketed,
-)
-from security_master_spark.operators.rolling import (
-    DEFAULT_MAX_BROADCAST_ROWS,
-)
 
 
 def trailing_interval_sum(
@@ -67,12 +55,6 @@ def trailing_interval_sum(
     row_id: str,
     out_n: str = "n_trailing",
     out_units: str = "units_trailing",
-    scratch_path: str | None = None,
-    distributed_prefix: bool = False,
-    carry_bucket_us: int | None = None,
-    cache_registry: list[DataFrame] | None = None,
-    max_carry_rows: int | None = DEFAULT_MAX_CARRY_ROWS,
-    max_broadcast_rows: int | None = DEFAULT_MAX_BROADCAST_ROWS,
 ) -> DataFrame:
     """Per row: COUNT(*) and SUM(units) over the trailing closed
     interval ``[ts − lookback_us, ts]`` within the row's key group,
@@ -95,164 +77,32 @@ def trailing_interval_sum(
 
     Returns ``df``'s ``row_id`` plus ``out_n`` (long) and
     ``out_units`` (long, NULL when the frame has no non-null units).
-
-    ``scratch_path``: optional parquet path (lake-backed at cluster
-    scale — the plans/io_scratch.py root) to which the prefix stage's
-    shared frame is materialized ONCE — the per-row cum-prefix frame
-    on the default path, the per-(key, ts) ANCHOR frame under
-    ``distributed_prefix`` (there the anchor subtree is the expensive
-    shared input: both the per-row re-attach and the carry stage
-    derive from the re-read, closing the round-10 gap where only the
-    re-attach side was covered). The shared subtree feeds two
-    consumers and Spark plans no ReusedExchange across them, so by
-    default it evaluates twice — a 2× constant on the O(n) pass.
-    Opting in trades one parquet write+read of narrow rows for that
-    recompute; worth it whenever the input plan upstream is itself
-    expensive or the corpus is dense (measured at the 6M-tick stress
-    corpus in PLANS.md). ``persist()`` is deliberately NOT the
-    mechanism: InMemoryRelation drops size stats and downstream
-    broadcasts degrade to sort-merge joins (the g6 lesson, measured
-    10× worse).
-
-    ``scratch_path`` is EXCLUSIVE to one call and live until the
-    returned frame's last consumption: the write job runs eagerly at
-    call time (``mode("overwrite")``) but the returned DataFrame
-    lazily RE-READS the path, so a second call sharing the path — or
-    any overwrite of it before the first result is fully consumed —
-    silently replaces the files under the live reader and corrupts
-    the first result. Namespace per call (uuid/monotonic suffix under
-    a scratch root) when calling in a loop.
-
-    ``distributed_prefix`` (opt-in, round 10; carry parallelized
-    round 11): compute BOTH skew-sensitive stages without a per-key
-    serial pass over O(rows) —
-
-    - cum-prefix: collapse to per-(key, ts) partials, run them through
-      operators/rolling.py:distributed_cumsum (range-partition +
-      offset prefix-sum), re-attach per row by null-safe (key, ts)
-      equi-join;
-    - boundary carry: operators/asof.py:asof_carry_bucketed — the
-      union-and-carry merge decomposed into within-(key, time-bucket)
-      windows plus a cross-bucket carry over a COLLAPSED per-bucket
-      summary table (the only remaining key-serial pass, O(active
-      buckets) rows). ``carry_bucket_us`` sets the bucket width;
-      default ``lookback_us`` (span/lookback buckets per key).
-
-    Value-identical to the default path by test (equal-ts ties, NULL
-    units, NULL keys). Round-10 prefix-only form measured 1.34× on a
-    ONE-key corpus but 0.84× on balanced keys (the serial carry was
-    the Amdahl cap); round-11 numbers for the full form are in
-    PLANS.md. Default stays False: the certified w11 plan is
-    byte-for-byte unchanged unless the caller opts in.
-
-    ``cache_registry``: distributed_cumsum embeds a load-bearing
-    ``persist()`` the CacheManager holds until explicit unpersist —
-    pass a list to receive it for release after consumption
-    (operators/rolling.py contract).
-
-    ``max_carry_rows``: passthrough to the boundary carry's fused
-    broadcast guard (distributed path only) — the carry table holds
-    one row per distinct (key, boundary bucket) ≈ keys ×
-    span/carry_bucket_us, and the default bound aborts the first
-    action past :data:`~security_master_spark.operators.asof.
-    DEFAULT_MAX_CARRY_ROWS` cells. On corpora where keys ×
-    span/lookback legitimately exceeds the bound, widen
-    ``carry_bucket_us`` (the carry stays exact at any width), raise
-    the bound on a big-driver cluster, or pass ``None`` to disable.
-
-    ``max_broadcast_rows`` (distributed path only): passthrough to
-    the cum-prefix stage's fused guard — distributed_cumsum's
-    per-(range, key) offsets table is force-broadcast and O(distinct
-    keys); the same raise-at-first-action contract applies (see
-    operators/rolling.py:_nullsafe_attach). ``None`` disables.
     """
     keys = list(keys)
     base = df.select(
         row_id, *keys, F.col(ts_us).alias("_us"), units.alias("_u")
     )
-    if distributed_prefix:
-        # Skew path (round 10): collapse to per-(key, ts) partials
-        # first (parallel hash agg — RANGE peers share the prefix, so
-        # the per-ts totals are all the window needs), then running
-        # totals via the range-partitioned cumsum — no per-key serial
-        # pass. The per-row prefix re-attaches by (key, ts) equi-join
-        # (null-safe: NULL keys are first-class window groups).
-        from security_master_spark.operators.rolling import (
-            distributed_cumsum,
-        )
-
-        per_ts = base.groupBy(*keys, "_us").agg(
-            F.count("*").alias("_tc"),
-            F.sum("_u").alias("_tu"),
-            F.count("_u").alias("_tcn"),
-        )
-        anchors = distributed_cumsum(
-            per_ts,
-            keys,
-            ["_us"],
-            {"_an": "_tc", "_au": "_tu", "_ann": "_tcn"},
-            cache_registry=cache_registry,
-            max_broadcast_rows=max_broadcast_rows,
-        ).select(*keys, "_us", "_an", "_au", "_ann")
-        # counts are never NULL (count ≥ 1 per collapsed row), but the
-        # cumsum leaves them nullable; normalize to the window form's
-        # non-null longs so downstream arithmetic is identical
-        anchors = anchors.select(
-            *keys,
-            "_us",
-            F.coalesce("_an", F.lit(0)).alias("_an"),
-            "_au",
-            F.coalesce("_ann", F.lit(0)).alias("_ann"),
-        )
-        # Scratch covers the SHARED subtree: anchors feed both the
-        # per-row re-attach below and the carry stage — materializing
-        # the joined per-row frame instead (the round-10 form) left
-        # the carry recomputing the whole anchor plan.
-        if scratch_path is not None:
-            anchors.write.mode("overwrite").parquet(scratch_path)
-            anchors = df.sparkSession.read.parquet(scratch_path)
-        a_small = anchors.withColumnRenamed("_us", "_a_us")
-        for k in keys:
-            a_small = a_small.withColumnRenamed(k, f"_a_{k}")
-        cond = base["_us"].eqNullSafe(a_small["_a_us"])
-        for k in keys:
-            cond = cond & base[k].eqNullSafe(a_small[f"_a_{k}"])
-        cur = (
-            base.join(a_small, cond, "inner")
-            .select(
-                row_id,
-                *[base[k] for k in keys],
-                base["_us"],
-                F.col("_an").alias("_cn"),
-                F.col("_au").alias("_cu"),
-                F.col("_ann").alias("_cnn"),
-            )
-        )
-    else:
-        w_cum = (
-            Window.partitionBy(*keys)
-            .orderBy("_us")
-            .rangeBetween(Window.unboundedPreceding, 0)
-        )
-        cur = base.select(
-            row_id,
-            *keys,
-            "_us",
-            F.count("*").over(w_cum).alias("_cn"),
-            F.sum("_u").over(w_cum).alias("_cu"),
-            F.count("_u").over(w_cum).alias("_cnn"),
-        )
-        if scratch_path is not None:
-            cur.write.mode("overwrite").parquet(scratch_path)
-            cur = df.sparkSession.read.parquet(scratch_path)
-        # Peers share the RANGE prefix, so one anchor per (key, ts) is
-        # the whole lookup table; max() == any peer's value by
-        # construction.
-        anchors = cur.groupBy(*keys, "_us").agg(
-            F.max("_cn").alias("_an"),
-            F.max("_cu").alias("_au"),
-            F.max("_cnn").alias("_ann"),
-        )
+    w_cum = (
+        Window.partitionBy(*keys)
+        .orderBy("_us")
+        .rangeBetween(Window.unboundedPreceding, 0)
+    )
+    cur = base.select(
+        row_id,
+        *keys,
+        "_us",
+        F.count("*").over(w_cum).alias("_cn"),
+        F.sum("_u").over(w_cum).alias("_cu"),
+        F.count("_u").over(w_cum).alias("_cnn"),
+    )
+    # Peers share the RANGE prefix, so one anchor per (key, ts) is
+    # the whole lookup table; max() == any peer's value by
+    # construction.
+    anchors = cur.groupBy(*keys, "_us").agg(
+        F.max("_cn").alias("_an"),
+        F.max("_cu").alias("_au"),
+        F.max("_cnn").alias("_ann"),
+    )
     # As-of merge via union-and-carry: anchors and probes interleave on
     # the time axis; carrying the last non-null anchor prefix forward
     # gives every probe the prefix at the greatest anchor ts ≤ probe t.
@@ -262,75 +112,45 @@ def trailing_interval_sum(
     # (is_a DESC) so an anchor exactly at the probe t is included.
     # Probes come from `base`, not `cur`: they only need (id, key, ts),
     # and deriving them pre-window keeps the cum WindowExec out of
-    # this subtree. Without `scratch_path` the cum window evaluates
-    # twice (anchors + final join; the executed plan shows no
-    # ReusedExchange across the two subtrees) — a 2× constant on an
-    # O(n) pass, measured fine at 10× density; `scratch_path`
-    # materializes `cur` once instead (PLANS.md g6 rule; see the
-    # docstring for why persist() is not the mechanism).
-    if distributed_prefix:
-        # Round-11 carry: same union-and-carry semantics, decomposed
-        # into (key, time-bucket) windows + a collapsed cross-bucket
-        # summary carry — no per-key serial pass over O(rows) remains
-        # on this path (operators/asof.py:asof_carry_bucketed).
-        probes = base.select(
-            F.col(row_id).alias("_rid"),
-            *keys,
-            (F.col("_us") - F.lit(lookback_us + 1)).alias("_t"),
-        )
-        a_t = anchors.select(
-            *keys, F.col("_us").alias("_t"), "_an", "_au", "_ann"
-        )
-        bnd = asof_carry_bucketed(
-            probes,
-            a_t,
-            keys,
-            "_t",
-            ["_an", "_au", "_ann"],
-            carry_bucket_us or max(lookback_us, 1),
-            max_carry_rows=max_carry_rows,
-        ).select(
+    # this subtree. The cum window still evaluates twice (anchors +
+    # final join; the executed plan shows no ReusedExchange across the
+    # two subtrees) — a 2× constant on an O(n) pass, measured fine at
+    # 10× density.
+    probes = base.select(
+        F.col(row_id).alias("_rid"),
+        *keys,
+        (F.col("_us") - F.lit(lookback_us + 1)).alias("_t"),
+        F.lit(0).alias("_is_a"),
+        F.lit(None).cast("long").alias("_an"),
+        F.lit(None).cast("long").alias("_au"),
+        F.lit(None).cast("long").alias("_ann"),
+    )
+    a_t = anchors.select(
+        F.lit(None).cast(cur.schema[row_id].dataType).alias("_rid"),
+        *keys,
+        F.col("_us").alias("_t"),
+        F.lit(1).alias("_is_a"),
+        "_an",
+        "_au",
+        "_ann",
+    )
+    w_carry = (
+        Window.partitionBy(*keys)
+        .orderBy(F.col("_t").asc(), F.col("_is_a").desc())
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    bnd = (
+        a_t.unionByName(probes)
+        .select(
             "_rid",
-            F.col("_an").alias("_bn"),
-            F.col("_au").alias("_bu"),
-            F.col("_ann").alias("_bnn"),
+            "_is_a",
+            F.last("_an", ignorenulls=True).over(w_carry).alias("_bn"),
+            F.last("_au", ignorenulls=True).over(w_carry).alias("_bu"),
+            F.last("_ann", ignorenulls=True).over(w_carry).alias("_bnn"),
         )
-    else:
-        probes = base.select(
-            F.col(row_id).alias("_rid"),
-            *keys,
-            (F.col("_us") - F.lit(lookback_us + 1)).alias("_t"),
-            F.lit(0).alias("_is_a"),
-            F.lit(None).cast("long").alias("_an"),
-            F.lit(None).cast("long").alias("_au"),
-            F.lit(None).cast("long").alias("_ann"),
-        )
-        a_t = anchors.select(
-            F.lit(None).cast(cur.schema[row_id].dataType).alias("_rid"),
-            *keys,
-            F.col("_us").alias("_t"),
-            F.lit(1).alias("_is_a"),
-            "_an",
-            "_au",
-            "_ann",
-        )
-        w_carry = (
-            Window.partitionBy(*keys)
-            .orderBy(F.col("_t").asc(), F.col("_is_a").desc())
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        bnd = (
-            a_t.unionByName(probes)
-            .select(
-                "_rid",
-                "_is_a",
-                F.last("_an", ignorenulls=True).over(w_carry).alias("_bn"),
-                F.last("_au", ignorenulls=True).over(w_carry).alias("_bu"),
-                F.last("_ann", ignorenulls=True).over(w_carry).alias("_bnn"),
-            )
-            .filter(F.col("_is_a") == 0)
-            .select("_rid", "_bn", "_bu", "_bnn")
-        )
+        .filter(F.col("_is_a") == 0)
+        .select("_rid", "_bn", "_bu", "_bnn")
+    )
     out = cur.join(bnd, cur[row_id] == bnd["_rid"], "inner")
     nn_frame = F.col("_cnn") - F.coalesce(F.col("_bnn"), F.lit(0))
     return out.select(

@@ -1,6 +1,6 @@
 """Static scale-hazard audit over a DataFrame's optimized logical
 plan — the round-12 broadcast-site audit (PLANS.md) mechanized as an
-API, the way operators/spelling.py mechanized the regime tables.
+API.
 
 The manual audit's rules, encoded:
 
@@ -77,10 +77,9 @@ The manual audit's rules, encoded:
   unbounded broadcast. Timeout/timer-managed stateful operators are
   exempt; complete-mode aggregates make this advisory, not hard.
 
-Findings are advisory by construction — the runtime guards
-(``max_carry_rows`` / ``max_broadcast_rows``) remain the enforcement
-layer; this module exists so the next forced broadcast of a scaling
-table is caught at review time, not at 100 TB.
+Findings are advisory by construction; this module exists so the
+next forced broadcast of a scaling table is caught at review time,
+not at 100 TB.
 
 Implementation detail: walks the JVM optimized plan via the py4j
 bridge (class names + ``stats().sizeInBytes()``), read-only — no job

@@ -78,13 +78,11 @@ def a23_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_id) frame ordering on both engines. Scale note: per-row set
     state is bounded by the frame length (100), so memory is
     O(frame), not O(partition) — but PARALLELISM is one task per
-    event_type, a wall at cluster scale. The production spelling is
-    operators/rolling.py:rolling_distinct_count (distributed rank +
-    halo buckets; hash-equal by test, 2-7.8× at the 6M corpus —
-    PLANS.md round-10 halo study); for unbounded or very long frames
-    the path is a8's HLL sketches merged per window. This query stays
-    as the portable SQL-surface semantics reference (the w10/w11
-    pattern)."""
+    event_type, a wall at cluster scale. This portable form is the
+    only spelling: a distributed-rank + halo-bucket variant ran 2-7.8×
+    faster only on the 6M-tick stress corpus (PLANS.md round-10 halo
+    study), which no registered query serves; for unbounded or very
+    long frames the path is a8's HLL sketches merged per window."""
     from pyspark.sql import Window
 
     from security_master_spark.datasets import load_table

@@ -54,35 +54,18 @@ def d39_var_es(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan.
 
     Plan decision (round 11, measured — PLANS.md "d39 rank-plan study"):
-    the round-10 verdict named this query as the registry consumer
-    for operators/rolling.py:distributed_row_number. The swap was
-    built, hash-certified green against this unchanged oracle, and
-    A/B-measured: **0.49× at sf0.1** (0.87 → 1.77 s — the rank's
-    load-bearing persist + extra exchanges are fixed overhead that
-    dominates at 150k rows) vs **1.39× at a 10×-replicated 96%-
-    one-segment corpus** (3.77 → 2.72 s), so the REGISTERED plan
-    stays the portable window form and the distributed plan ships as
-    :func:`d39_var_es_distributed` below — held value-equal by
-    tests/test_round11_fixes.py, the a23/w10-w11 precedent. At 100 TB
-    the per-segment sort is the honest cost of an exact tail; the
-    sketch path for screening is a13's t-digest, and the rank half's
-    exact parallel spelling is one function away when a dominant
-    segment makes the window form straggle."""
-    px = _d39_px(spark, sf_dir)
-    w = Window.partitionBy("segment").orderBy(
-        F.col("price").desc(), F.col("o_orderkey")
-    )
-    wn = Window.partitionBy("segment")
-    px = px.withColumn("rn", F.row_number().over(w)).withColumn(
-        "n", F.count("*").over(wn)
-    )
-    return _d39_tail_agg(px)
-
-
-def _d39_px(spark: SparkSession, sf_dir: str) -> DataFrame:
+    an exact distributed rank (range-partition + offset prefix-sum in
+    place of one WindowExec sort task per segment) was built, matched
+    this oracle, and A/B-measured: **0.49× at sf0.1** (0.87 → 1.77 s —
+    its load-bearing persist and extra exchanges are fixed overhead
+    that dominates at 150k rows) vs **1.39× at a 10×-replicated 96%-
+    one-segment corpus** (3.77 → 2.72 s). No registered corpus is that
+    skewed, so the window form is the only spelling. At 100 TB the
+    per-segment sort is the honest cost of an exact tail; the sketch
+    path for screening is a13's t-digest."""
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
-    return (
+    px = (
         # no forced broadcast: customer is SF-linear; the raw-table
         # projection's file stats let the planner broadcast while
         # small and shuffle-join at scale (round-12 audit, PLANS.md)
@@ -96,86 +79,19 @@ def _d39_px(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderkey",
         )
     )
-
-
-def _d39_tail_agg(px: DataFrame) -> DataFrame:
+    w = Window.partitionBy("segment").orderBy(
+        F.col("price").desc(), F.col("o_orderkey")
+    )
+    wn = Window.partitionBy("segment")
+    px = px.withColumn("rn", F.row_number().over(w)).withColumn(
+        "n", F.count("*").over(wn)
+    )
     in_tail = F.col("rn") <= F.ceil(0.05 * F.col("n")).cast("bigint")
     return px.groupBy("segment").agg(
         F.max("n").cast("bigint").alias("n_orders"),
         dround(F.percentile("price", 0.95), 4).alias("var95"),
         dround(F.avg(F.when(in_tail, F.col("price"))), 4).alias("es95"),
         F.count(F.when(in_tail, 1)).cast("bigint").alias("n_tail"),
-    )
-
-
-def d39_var_es_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """d39_var_es with BOTH exact halves parallel — the full scale
-    spelling of the tail-risk query, value-equal to the registered
-    window form by test (bit-equal, not rounded-equal):
-
-    - RANK half: operators/rolling.py:distributed_row_number —
-      range-partition + offset prefix-sum instead of one WindowExec
-      sort task per segment — with the per-segment counts riding
-      along via ``counts_col`` (zero extra input scans).
-    - PERCENTILE half: Spark's ``percentile`` aggregate buffers every
-      group value on one reduce task per key (the serial half the d39
-      docstring documents). Here the SAME descending rank the tail
-      already uses locates the two interpolation anchors: ascending
-      value index i (0-based) is descending rank n−i, so
-      ``pos = 0.95·(n−1)``, ``v_lo = price at rn = n−floor(pos)``,
-      ``v_hi = price at rn = n−ceil(pos)`` — two conditional
-      aggregates inside the segment rollup already being computed,
-      interpolated with Percentile's own formula term-for-term. No
-      per-key value buffer, no second pass, no extra shuffle.
-      (The general standalone operator is
-      operators/rolling.py:distributed_percentile, bit-equal to the
-      aggregate by test; this inline form exists because the rank is
-      already in hand.)
-
-    NOT in the registry (round-9 freeze; and the measured sf0.1
-    negative in the d39 docstring keeps the bench on the window
-    form): 1.39× at the 10×-skew corpus, cluster-size-bound beyond
-    it. Embeds the rank's bounded load-bearing persist (3 narrow
-    columns of orders; cache_registry is the release path)."""
-    from security_master_spark.operators.rolling import (
-        distributed_row_number,
-    )
-
-    px = distributed_row_number(
-        _d39_px(spark, sf_dir),
-        ["segment"],
-        [F.col("price").desc(), "o_orderkey"],
-        out_col="rn",
-        counts_col="n",
-    )
-    in_tail = F.col("rn") <= F.ceil(0.05 * F.col("n")).cast("bigint")
-    pos = F.lit(0.95) * (F.col("n") - 1).cast("double")
-    lo = F.floor(pos).cast("long")
-    hi = F.ceil(pos).cast("long")
-    agg = px.groupBy("segment").agg(
-        F.max("n").cast("bigint").alias("n_orders"),
-        F.max(F.when(F.col("rn") == F.col("n") - lo, F.col("price"))).alias(
-            "_vlo"
-        ),
-        F.max(F.when(F.col("rn") == F.col("n") - hi, F.col("price"))).alias(
-            "_vhi"
-        ),
-        F.max(pos).alias("_pos"),
-        F.max(lo).alias("_lo"),
-        F.max(hi).alias("_hi"),
-        dround(F.avg(F.when(in_tail, F.col("price"))), 4).alias("es95"),
-        F.count(F.when(in_tail, 1)).cast("bigint").alias("n_tail"),
-    )
-    var_raw = F.when(F.col("_lo") == F.col("_hi"), F.col("_vlo")).otherwise(
-        (F.col("_hi").cast("double") - F.col("_pos")) * F.col("_vlo")
-        + (F.col("_pos") - F.col("_lo").cast("double")) * F.col("_vhi")
-    )
-    return agg.select(
-        "segment",
-        "n_orders",
-        dround(var_raw, 4).alias("var95"),
-        "es95",
-        "n_tail",
     )
 
 

@@ -1,6 +1,5 @@
-"""Round-10 fixes: the trailing operator's row_id contract proven by
-test (round-9 verdict order #3), the tick_order_key domain guard, and
-driver_sim's --json argument validation (round-9 ADVICE items)."""
+"""Round-10 fixes: the tick_order_key domain guard and driver_sim's
+--json argument validation (round-9 ADVICE items)."""
 
 from __future__ import annotations
 
@@ -13,48 +12,8 @@ from pyspark.sql import functions as F
 from security_master_spark.functions.ordering import (
     tick_order_domain_violations,
 )
-from security_master_spark.operators.trailing import trailing_interval_sum
 
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def test_trailing_null_row_id_silently_drops_the_row(spark):
-    """operators/trailing.py documents row_id as NON-NULL: the final
-    re-attach is an inner equi-join on row_id, so a NULL id's row
-    vanishes from the output (and NO other row is disturbed). This
-    pins the documented behavior so a future rewrite that changes it
-    must also change the contract."""
-    df = spark.createDataFrame(
-        [(1, "k", 0, 5), (None, "k", 10, 7), (3, "k", 11, 2)],
-        "event_id long, k string, us long, u long",
-    )
-    out = {
-        r.event_id: (r.n_trailing, r.units_trailing)
-        for r in trailing_interval_sum(
-            df, ["k"], "us", 10, F.col("u"), "event_id"
-        ).collect()
-    }
-    # the NULL-id row is gone; surviving rows still see it in their
-    # trailing frames (the contract governs the re-attach, not the
-    # window math): row 3's frame [1, 11] holds us=10 (the NULL-id
-    # row, u=7) and us=11 (u=2)
-    assert set(out) == {1, 3}
-    assert out[1] == (1, 5)
-    assert out[3] == (2, 9)
-
-
-def test_trailing_duplicate_row_id_fans_out(spark):
-    """Duplicate row_ids fan out through the inner re-attach join —
-    the other documented half of the contract."""
-    df = spark.createDataFrame(
-        [(1, "k", 0, 5), (1, "k", 100, 7)],
-        "event_id long, k string, us long, u long",
-    )
-    rows = trailing_interval_sum(
-        df, ["k"], "us", 10, F.col("u"), "event_id"
-    ).collect()
-    # 2 input rows × 2 boundary probes sharing the id → 4 output rows
-    assert len(rows) == 4
 
 
 def test_tick_order_domain_violations_flags_out_of_contract_rows(spark):
@@ -81,232 +40,6 @@ def test_tick_order_domain_violations_flags_out_of_contract_rows(spark):
         tick_order_domain_violations(df, "ts", "event_id")
     ).count()
     assert ok == 2
-
-
-def test_rolling_distinct_halo_equals_window_form(spark, sf_dir):
-    """operators/rolling.py: the halo-parallel bucketed spelling must
-    be value-identical to a23's portable window form — same frame,
-    same NULL handling — including across bucket boundaries (tiny
-    bucket_rows forces every row near a halo)."""
-    from pyspark.sql import Window
-
-    from security_master_spark.datasets import load_table
-    from security_master_spark.operators.rolling import (
-        rolling_distinct_count,
-    )
-
-    events = load_table(spark, sf_dir, "events").select(
-        "event_type", "event_id", "ts", "user_id"
-    )
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-99, 0)
-    )
-    portable = events.select(
-        "event_type",
-        "event_id",
-        F.size(F.collect_set("user_id").over(w))
-        .cast("bigint")
-        .alias("rolling_users"),
-    )
-    halo = rolling_distinct_count(
-        events,
-        ["event_type"],
-        ["ts", "event_id"],
-        "user_id",
-        frame_rows=100,
-        out_col="rolling_users",
-        bucket_rows=128,  # far below the row count: every bucket halos
-        distributed_rank=False,  # the serial-rank cross-check impl
-    ).select("event_type", "event_id", "rolling_users")
-    assert portable.exceptAll(halo).isEmpty()
-    assert halo.exceptAll(portable).isEmpty()
-    # distributed-rank form: small ranges force every key to span
-    # many range partitions (the offset prefix-sum path), tiny
-    # buckets force halos — both correctness hazards at once
-    dist = rolling_distinct_count(
-        events,
-        ["event_type"],
-        ["ts", "event_id"],
-        "user_id",
-        frame_rows=100,
-        out_col="rolling_users",
-        bucket_rows=128,
-        distributed_rank=True,
-        n_ranges=7,
-    ).select("event_type", "event_id", "rolling_users")
-    assert portable.exceptAll(dist).isEmpty()
-    assert dist.exceptAll(portable).isEmpty()
-
-
-def test_trailing_distributed_prefix_is_value_identical(spark, sf_dir):
-    """operators/trailing.py distributed_prefix: the collapsed-partial
-    + distributed-cumsum prefix stage must reproduce the window form
-    exactly — the round-9 hand-computed frame (ties, NULL units,
-    all-NULL frames) AND the full sf0.001 events corpus."""
-    from security_master_spark.datasets import load_table
-    from security_master_spark.operators.trailing import (
-        trailing_interval_sum,
-    )
-
-    rows = [
-        (1, "k", 0, 5), (2, "k", 10, 7), (3, "k", 11, None),
-        (4, "k", 30, None), (5, "k", 30, None), (6, "z", 5, 3),
-    ]
-    expected = {
-        1: (1, 5), 2: (2, 12), 3: (2, 7),
-        4: (2, None), 5: (2, None), 6: (1, 3),
-    }
-    df = spark.createDataFrame(
-        rows, "event_id long, k string, us long, u long"
-    )
-    got = {
-        r.event_id: (r.n_trailing, r.units_trailing)
-        for r in trailing_interval_sum(
-            df, ["k"], "us", 10, F.col("u"), "event_id",
-            distributed_prefix=True,
-        ).collect()
-    }
-    assert got == expected
-
-    events = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.unix_micros(F.col("ts")).alias("us"),
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-    )
-
-    def run(**kw):
-        return trailing_interval_sum(
-            events, ["event_type"], "us", 3_600_000_000,
-            F.col("cents"), "event_id", **kw,
-        ).select("event_id", "n_trailing", "units_trailing")
-
-    default = run()
-    dist = run(distributed_prefix=True)
-    assert default.exceptAll(dist).isEmpty()
-    assert dist.exceptAll(default).isEmpty()
-
-
-def test_rolling_rows_agg_matches_window_form(spark, sf_dir):
-    """operators/rolling.py: the general skew-proof ROWS-frame form
-    must match the portable window spelling for BOTH an invertible
-    (sum) and a non-invertible (max) aggregate in one call, across
-    halo boundaries."""
-    from pyspark.sql import Window
-
-    from security_master_spark.datasets import load_table
-    from security_master_spark.operators.rolling import rolling_rows_agg
-
-    events = load_table(spark, sf_dir, "events").select(
-        "event_type", "event_id", "ts", "value"
-    )
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-49, 0)
-    )
-    ref = events.select(
-        "event_type",
-        "event_id",
-        F.sum("value").over(w).alias("roll_sum"),
-        F.max("value").over(w).alias("roll_max"),
-    )
-    got = rolling_rows_agg(
-        events,
-        ["event_type"],
-        ["ts", "event_id"],
-        frame_rows=50,
-        aggs={
-            "roll_sum": lambda fw: F.sum("value").over(fw),
-            "roll_max": lambda fw: F.max("value").over(fw),
-        },
-        bucket_rows=128,
-        n_ranges=5,
-    ).select("event_type", "event_id", "roll_sum", "roll_max")
-    assert ref.exceptAll(got).isEmpty()
-    assert got.exceptAll(ref).isEmpty()
-
-
-def test_distributed_row_number_matches_window_form(spark, sf_dir):
-    """operators/rolling.py: the range-partition + offset-prefix-sum
-    positions must equal row_number() OVER exactly, per key, including
-    with few ranges (keys forced to span range partitions)."""
-    from pyspark.sql import Window
-
-    from security_master_spark.datasets import load_table
-    from security_master_spark.operators.rolling import (
-        distributed_row_number,
-    )
-
-    events = load_table(spark, sf_dir, "events").select(
-        "event_type", "event_id", "ts"
-    )
-    w = Window.partitionBy("event_type").orderBy("ts", "event_id")
-    ref = events.select(
-        "event_type", "event_id", F.row_number().over(w).alias("row_num")
-    )
-    got = distributed_row_number(
-        events, ["event_type"], ["ts", "event_id"], n_ranges=5
-    ).select("event_type", "event_id", "row_num")
-    assert ref.exceptAll(got).isEmpty()
-    assert got.exceptAll(ref).isEmpty()
-
-
-def test_distributed_row_number_descending_order(spark, sf_dir):
-    """Descending order expressions (the README tail-rank example)
-    must range-partition and rank identically to the window form."""
-    from pyspark.sql import Window
-
-    from security_master_spark.datasets import load_table
-    from security_master_spark.operators.rolling import (
-        distributed_row_number,
-    )
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderpriority", "o_totalprice"
-    )
-    order_exprs = [F.col("o_totalprice").desc(), F.col("o_orderkey")]
-    w = Window.partitionBy("o_orderpriority").orderBy(*order_exprs)
-    ref = orders.select(
-        "o_orderkey", F.row_number().over(w).alias("row_num")
-    )
-    got = distributed_row_number(
-        orders, ["o_orderpriority"], order_exprs, n_ranges=5
-    ).select("o_orderkey", "row_num")
-    assert ref.exceptAll(got).isEmpty()
-    assert got.exceptAll(ref).isEmpty()
-
-
-def test_distributed_row_number_plan_shape(spark, sf_dir):
-    """The offsets attach must be a broadcast hash join (the offsets
-    table is O(ranges × keys) rows) — never a sort-merge join or a
-    nested loop over the data side."""
-    from security_master_spark.datasets import load_table
-    from security_master_spark.operators.rolling import (
-        distributed_row_number,
-    )
-
-    events = load_table(spark, sf_dir, "events")
-    out = distributed_row_number(events, ["event_type"], ["ts", "event_id"])
-    plan = out._sc._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "formatted"
-    )
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_rolling_distinct_rejects_undersized_buckets(spark):
-    from security_master_spark.operators.rolling import (
-        rolling_distinct_count,
-    )
-
-    df = spark.createDataFrame([(1, 1)], "k long, v long")
-    with pytest.raises(ValueError, match="bucket_rows"):
-        rolling_distinct_count(df, ["k"], ["v"], "v", frame_rows=100,
-                               bucket_rows=64)
 
 
 def _load_driver_sim():

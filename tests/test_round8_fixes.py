@@ -8,8 +8,6 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import functions as F
-
 from security_master_spark.plans.io_scratch import (
     SCRATCH_CONF_KEY,
     _root,
@@ -71,40 +69,3 @@ def test_iterative_scratch_is_run_scoped():
     assert _scratch("/data/sf0.01", "x") == "/tmp/sms_io/sf0.01/x"
 
 
-def test_trailing_interval_sum_ties_boundary_and_nulls(spark):
-    """operators/trailing.py edge semantics against a hand-computed
-    frame: RANGE ties are peers (equal-ts rows report the identical
-    frame), the left edge is inclusive (a row exactly lookback old is
-    IN the frame; one microsecond older is out), and an all-null
-    frame yields NULL — the prefix difference must not manufacture a
-    zero."""
-    from security_master_spark.operators.trailing import (
-        trailing_interval_sum,
-    )
-
-    # key k: ts in µs, lookback 10 µs
-    rows = [
-        (1, "k", 0, 5),      # opens the history
-        (2, "k", 10, 7),     # frame [0,10]: rows 1,2  -> n=2, u=12
-        (3, "k", 11, None),  # frame [1,11]: rows 2,3  -> n=2, u=7
-        (4, "k", 30, None),  # frame [20,30]: row 4    -> n=1, u=NULL
-        (5, "k", 30, None),  # tie with 4: same frame  -> n=2, u=NULL
-        (6, "z", 5, 3),      # other key: frames never mix
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id long, k string, us long, u long"
-    )
-    out = {
-        r.event_id: (r.n_trailing, r.units_trailing)
-        for r in trailing_interval_sum(
-            df, ["k"], "us", 10, F.col("u"), "event_id"
-        ).collect()
-    }
-    assert out == {
-        1: (1, 5),
-        2: (2, 12),      # inclusive left edge: ts=0 row is in [0,10]
-        3: (2, 7),       # ts=0 aged out by 1 µs; null row counts in n
-        4: (2, None),    # ties are peers: both ts=30 rows see both
-        5: (2, None),    # all-null frame -> NULL, not cum-diff 0
-        6: (1, 3),
-    }

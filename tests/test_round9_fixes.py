@@ -1,76 +1,9 @@
-"""Round-9 fixes: the opt-in scratch materialization of the trailing
-operator's cum-prefix frame (round-8 verdict order #3) and the t3
-oracle's integer-microsecond boundary math (round-8 ADVICE)."""
+"""Round-9 fixes: the as-of join's duplicate-timestamp tiebreak, the
+tick-order key, and the io17 escape round trip."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-
-from security_master_spark.operators.trailing import trailing_interval_sum
-
-_ROWS = [
-    (1, "k", 0, 5),
-    (2, "k", 10, 7),
-    (3, "k", 11, None),
-    (4, "k", 30, None),
-    (5, "k", 30, None),
-    (6, "z", 5, 3),
-]
-_EXPECTED = {
-    1: (1, 5),
-    2: (2, 12),
-    3: (2, 7),
-    4: (2, None),
-    5: (2, None),
-    6: (1, 3),
-}
-
-
-def test_trailing_scratch_path_is_value_identical(spark, tmp_path):
-    """scratch_path is a pure performance knob: the materialized
-    variant must return exactly the hand-computed frame the default
-    path does, and must actually leave the prefix frame on disk."""
-    df = spark.createDataFrame(
-        _ROWS, "event_id long, k string, us long, u long"
-    )
-    path = str(tmp_path / "trail_cum")
-    out = {
-        r.event_id: (r.n_trailing, r.units_trailing)
-        for r in trailing_interval_sum(
-            df, ["k"], "us", 10, F.col("u"), "event_id",
-            scratch_path=path,
-        ).collect()
-    }
-    assert out == _EXPECTED
-    # the cum frame really was materialized (both consumers read it)
-    cur = spark.read.parquet(path)
-    assert cur.count() == len(_ROWS)
-    assert {"_cn", "_cu", "_cnn"} <= set(cur.columns)
-
-
-def test_trailing_scratch_path_runs_the_cum_window_once(spark, tmp_path):
-    """The default plan evaluates the cum-prefix window in two
-    subtrees (no ReusedExchange); with scratch_path both consumers
-    scan the parquet materialization, so the returned plan carries
-    only the carry window — one fewer WindowExec than the default."""
-    df = spark.createDataFrame(
-        _ROWS, "event_id long, k string, us long, u long"
-    )
-
-    def n_windows(frame):
-        plan = frame._sc._jvm.PythonSQLUtils.explainString(
-            frame._jdf.queryExecution(), "formatted"
-        )
-        return plan.count("Window\n") + plan.count("Window (")
-
-    default = trailing_interval_sum(
-        df, ["k"], "us", 10, F.col("u"), "event_id"
-    )
-    scratched = trailing_interval_sum(
-        df, ["k"], "us", 10, F.col("u"), "event_id",
-        scratch_path=str(tmp_path / "trail_cum2"),
-    )
-    assert n_windows(scratched) < n_windows(default)
 
 
 def test_asof_join_tiebreak_pins_duplicate_timestamps(spark):
