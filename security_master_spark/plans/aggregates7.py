@@ -1,8 +1,5 @@
 """Round-6 aggregation batch (SURVEY.md §2.4): exact weighted median
 via the collapse-then-cumulate discipline.
-
-Registered as a round-7 rotation candidate (plans/registry.py); until
-its driver row lands, the local oracle mirror proves it.
 """
 
 from __future__ import annotations

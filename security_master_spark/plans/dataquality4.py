@@ -2,9 +2,6 @@
 volume-anomaly monitoring — the robust z-score discipline of
 d19_mad_outliers applied to the operational metric every pipeline
 pages on (daily row counts per stream).
-
-Registered as a round-7 rotation candidate (plans/registry.py); until
-its driver row lands, the local oracle mirror proves it.
 """
 
 from __future__ import annotations

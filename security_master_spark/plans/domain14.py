@@ -2,9 +2,6 @@
 lot-matching realized PnL — the position-accounting operator at the
 heart of every trade ledger, expressed as a cumulative-range interval
 join instead of a sequential lot queue.
-
-Registered as a round-7 rotation candidate (plans/registry.py); until
-its driver row lands, the local oracle mirror proves it.
 """
 
 from __future__ import annotations

@@ -11,9 +11,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from security_master_spark.datasets import load_table
 from security_master_spark.functions.rounding import dround, sql_dround
-
+from security_master_spark.operators.graph import (
+    both_directions,
+    count_triangles,
+    node_ids,
+    node_name,
+    part_pairs,
+    trade_pairs,
+)
 from security_master_spark.plans.registry import register
 
 _DAMPING = 0.85
@@ -79,30 +85,16 @@ def g1_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     enough that Catalyst handles it directly). The single 1-row
     node-count crossJoin at init is broadcast (allowlisted in
     tests/test_plans.py)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    # Internal node ids are LONGS (customer 2k, supplier 2k+1): every
-    # per-iteration shuffle hashes 8-byte keys instead of strings; the
-    # final projection decodes back to the oracle's readable form.
-    # PERSIST the distinct trading-pair frame: edges (both union
-    # sides), deg, and the rank-init path all walk it — without the
-    # cache the fact-table join + distinct re-derives once per
-    # consumer (round-15 measurement: the init path re-ran it even
-    # with `weighted` persisted, because deg and nn sit OUTSIDE that
-    # cache boundary — plans/r15/g1_pagerank_before.txt shows the
-    # duplicated scan subtrees).
-    base = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).alias("c"),
-            (F.col("l_suppkey") * 2 + 1).alias("s"),
-        )
-        .distinct()
-        .persist()
-    )
-    edges = base.select(F.col("c").alias("src"), F.col("s").alias("dst")).unionAll(
-        base.select(F.col("s").alias("src"), F.col("c").alias("dst"))
-    )
+    # PERSIST the distinct trading-pair frame (LONG node ids, see
+    # operators/graph.node_ids): edges (both union sides), deg, and the
+    # rank-init path all walk it — without the cache the fact-table
+    # join + distinct re-derives once per consumer (round-15
+    # measurement: the init path re-ran it even with `weighted`
+    # persisted, because deg and nn sit OUTSIDE that cache boundary —
+    # plans/r15/g1_pagerank_before.txt shows the duplicated scan
+    # subtrees).
+    base = node_ids(trade_pairs(spark, sf_dir)).persist()
+    edges = both_directions(base)
     # deg persisted too: it feeds the weighted annotation AND the
     # rank-init vector (node set + the 1/N seed) — node-count-sized,
     # the cheapest frame in the query.
@@ -140,16 +132,7 @@ def g1_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("node_out").alias("node"), "r", "n")
         )
     return ranks.select(
-        F.when(
-            F.col("node") % 2 == 0,
-            F.concat(F.lit("C"), (F.col("node") / 2).cast("long").cast("string")),
-        )
-        .otherwise(
-            F.concat(
-                F.lit("S"), ((F.col("node") - 1) / 2).cast("long").cast("string")
-            )
-        )
-        .alias("node"),
+        node_name(F.col("node")).alias("node"),
         dround(F.col("r"), 9).alias("rank"),
     )
 
@@ -201,36 +184,20 @@ def g2_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     (triangle COUNT is orientation-invariant), so the hash check
     certifies the optimized plan against the naive one.
 
-    Scale: the triangle probe is ADJACENCY-INTERSECTION (round-15
-    optimization): each node's oriented out-neighborhood collapses to
-    ONE sorted array (bounded O(sqrt m) by the orientation), and the
-    count is Σ over directed edges (s,t) of |N+(s) ∩ N+(t)| — every
-    triangle counted exactly once at its unique 2-out-degree pivot.
-    This replaces the materialized wedge self-join + closing-edge
-    probe, whose intermediate was measured at 941 MiB / 41M rows
-    shuffled AND sorted at sf0.1 (plans/r15/g2_*.txt): the array form
-    moves the same wedge information as ~1.2M rows / ~330 MB of
-    neighbor-id payload through one exchange, no sort, and turns the
-    closing-edge probe into an in-task sorted-array intersection.
+    Scale: the triangle probe is the adjacency intersection of
+    operators/graph.count_triangles (round-15 optimization) over
+    out-neighbourhood arrays bounded O(sqrt m) by the orientation. It
+    replaced the materialized wedge self-join + closing-edge probe,
+    whose intermediate was measured at 941 MiB / 41M rows shuffled
+    AND sorted at sf0.1 (plans/r15/g2_*.txt): the array form moves the
+    same wedge information as ~1.2M rows / ~330 MB of neighbor-id
+    payload through one exchange, with no sort.
     The final assembly is 1-row × 1-row (allowlisted)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    a, b = li.alias("a"), li.alias("b")
     # PERSIST the edge list: it feeds four plan subtrees (degree agg,
     # both wedge sides, the closing-edge probe) — without
     # materialization the fact-table self-join + distinct re-runs in
     # each of them.
-    e = (
-        a.join(
-            b,
-            (F.col("b.l_orderkey") == F.col("a.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-        )
-        .distinct()
-        .persist()
-    )
+    e = part_pairs(spark, sf_dir).distinct().persist()
     deg = (
         e.select(F.col("u").alias("node"))
         .unionAll(e.select(F.col("v").alias("node")))
@@ -266,28 +233,7 @@ def g2_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sort_array(F.collect_list("t")).alias("nbrs"))
         .persist()
     )
-    # Each directed edge (s, t) contributes |N+(s) ∩ N+(t)| triangles
-    # (the unique pivot s has out-edges to both t and the third node).
-    # Wedge information rides as the ns array alongside each exploded
-    # edge — one exchange on t, no 41M-row wedge materialization, no
-    # sort, and the closing-edge probe happens in-task on two sorted
-    # arrays.
-    cand = adj.select(
-        F.col("nbrs").alias("ns"), F.explode("nbrs").alias("t")
-    )
-    tri = (
-        cand.join(
-            adj.select(F.col("s").alias("t"), F.col("nbrs").alias("nt")),
-            "t",
-        )
-        .agg(
-            F.coalesce(
-                F.sum(F.size(F.array_intersect("ns", "nt"))), F.lit(0)
-            )
-            .cast("bigint")
-            .alias("n_triangles")
-        )
-    )
+    tri = count_triangles(adj, "s", "n_triangles")
     wedge_tot = deg.agg(
         F.sum(F.col("d") * (F.col("d") - 1) / 2).alias("n_wedges"),
         F.count("*").cast("bigint").alias("n_nodes"),
@@ -352,13 +298,11 @@ def g3_triangle_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     triangles on the sampled graph, scale by 1/p³. The wedge join —
     the expensive stage — shrinks by ~p² and the estimator's relative
     standard error is ≈ sqrt(p⁻³/T): under 1% on this graph's ~1.9M
-    triangles (tests/test_operators.py pins estimate-vs-exact within
+    triangles (tests/test_graph.py pins estimate-vs-exact within
     tolerance against g2's hash-certified count). Determinism makes
     the sketch FULLY SQL-oracle-checkable — same discipline as l51's
     hash-keyed weighted sampling, vs the rows-only checks
     engine-specific sketches (a8's HLL) are stuck with."""
-    li = load_table(spark, sf_dir, "lineitem")
-    a, b = li.alias("a"), li.alias("b")
     keep = (
         F.conv(
             F.substring(
@@ -384,43 +328,16 @@ def g3_triangle_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pairs instead of the full pair set. Written explicitly rather
     # than left to predicate pushdown: the filter must not stay above
     # the aggregate when the subtree sits under a cache boundary.
-    e = (
-        a.join(
-            b,
-            (F.col("b.l_orderkey") == F.col("a.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-        )
-        .filter(keep)
-        .distinct()
-        .persist()
-    )
-    # Same adjacency-intersection rewrite as g2 (see its docstring),
-    # here under the id-orientation the canonical u < v edges already
-    # encode: every sampled triangle a < b < c is counted once at its
-    # pivot edge (a, b) as c ∈ N+(a) ∩ N+(b). adj persisted like g2's:
-    # it feeds both the exploded candidate stream and the probe side.
+    e = part_pairs(spark, sf_dir).filter(keep).distinct().persist()
+    # Same adjacency intersection as g2, here under the id-orientation
+    # the canonical u < v edges already encode: every sampled triangle
+    # a < b < c is counted once at its pivot edge (a, b) as
+    # c ∈ N+(a) ∩ N+(b). adj persisted like g2's: it feeds both the
+    # exploded candidate stream and the probe side.
     adj = e.groupBy("u").agg(
         F.sort_array(F.collect_list("v")).alias("nbrs")
     ).persist()
-    cand = adj.select(
-        F.col("nbrs").alias("ns"), F.explode("nbrs").alias("t")
-    )
-    tri = (
-        cand.join(
-            adj.select(F.col("u").alias("t"), F.col("nbrs").alias("nt")),
-            "t",
-        )
-        .agg(
-            F.coalesce(
-                F.sum(F.size(F.array_intersect("ns", "nt"))), F.lit(0)
-            )
-            .cast("bigint")
-            .alias("n_sampled_triangles")
-        )
-    )
+    tri = count_triangles(adj, "u", "n_sampled_triangles")
     n_edges = e.agg(F.count("*").cast("bigint").alias("n_sampled_edges"))
     scale = (100.0 / _TRI_SAMPLE_PCT) ** 3
     return (

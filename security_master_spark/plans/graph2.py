@@ -13,8 +13,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from security_master_spark.datasets import fan_out, load_table
+from security_master_spark.datasets import fan_out
 from security_master_spark.functions.rounding import dround, sql_dround
+from security_master_spark.operators.graph import trade_pairs
 from security_master_spark.plans.registry import register
 
 _MIN_COMMON = 3  # candidate pairs must share ≥ this many customers
@@ -86,14 +87,7 @@ def g4_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     a parallel per-partition top-K + driver merge, never a global
     sort. Ties are broken by (s1, s2) so the K rows are deterministic
     cross-engine."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    e = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("cust"), F.col("l_suppkey").alias("supp")
-        )
-    )
+    e = trade_pairs(spark, sf_dir)
     # fan_out: single-row-group fixture scans are one task; the
     # round-robin exchange of the narrow (cust, supp) stream restores
     # map-side parallelism for the partial collect_set (its contract).
@@ -195,15 +189,7 @@ def g5_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     and fewer shuffled bytes (the explode doubles narrow rows
     PRE-aggregation, map-side combine collapses them before the
     exchange)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    e = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("cust"), F.col("l_suppkey").alias("supp")
-        )
-        .distinct()
-    )
+    e = trade_pairs(spark, sf_dir).distinct()
     deg = (
         e.select(
             F.explode(

@@ -9,11 +9,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-from security_master_spark.datasets import load_table
+from security_master_spark.operators.graph import (
+    both_directions,
+    node_ids,
+    peel_once,
+    trade_pairs,
+)
 from security_master_spark.plans.registry import register
-
-
 
 #: core threshold (minimum degree inside the surviving subgraph).
 _CORE_K = 8
@@ -85,22 +87,12 @@ def g6_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     once reuses the partitioning across every round; peeling is
     monotone (edge set only shrinks), and the distinct-pair collapse
     happens before any iteration."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    pairs = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).alias("c"),
-            (F.col("l_suppkey") * 2 + 1).alias("s"),
-        )
-        .distinct()
-    )
     # Loop-invariant materialization — localCheckpoint, the l16
-    # (connected-components) per-round pattern: cuts lineage like the
-    # round-8 parquet-scratch spelling did but without 5 disk
-    # encode/decode roundtrips (round-15 measurement: 3.07 → 2.46 s
-    # isolated at sf0.1). The alternatives stay measured-worse: raw
-    # lineage re-derives the lineitem⋈orders distinct ~12× (9-19 s at
+    # (connected-components) per-round pattern: cuts lineage without
+    # a disk encode/decode roundtrip per round (round-15 measurement:
+    # 3.07 → 2.46 s isolated at sf0.1 against per-round parquet
+    # writes). The alternatives stay measured-worse: raw lineage
+    # re-derives the lineitem⋈orders distinct ~12× (9-19 s at
     # sf0.01), and .persist() was 10× worse still (96 s) because the
     # cached InMemoryRelation loses size stats and every keep-join
     # fell back from broadcast to sort-merge — localCheckpoint's
@@ -108,29 +100,15 @@ def g6_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle sizes each round. Caveat, same as l16: localCheckpoint
     # is non-replicated executor storage (lineage is truncated, an
     # executor loss fails the job); a 100 TB run on unreliable nodes
-    # swaps in reliable checkpoint / the scratch-parquet spelling —
-    # one line, same shape.
-    edges = (
-        pairs.select(F.col("c").alias("src"), F.col("s").alias("dst"))
-        .unionAll(
-            pairs.select(
-                F.col("s").alias("src"), F.col("c").alias("dst")
-            )
-        )
-        .localCheckpoint()
-    )
-    for i in range(_PEEL_ROUNDS):
-        deg = edges.groupBy("src").agg(F.count("*").alias("d"))
-        keep = deg.filter(F.col("d") >= _CORE_K).select("src")
-        nxt = edges.join(keep, "src").join(
-            keep.withColumnRenamed("src", "dst"), "dst"
-        )
+    # swaps in a reliable ``checkpoint()`` — one line, same shape.
+    edges = both_directions(node_ids(trade_pairs(spark, sf_dir))).localCheckpoint()
+    for _ in range(_PEEL_ROUNDS):
         # Materialize every round, not just the base: round N's keep
         # set re-derives round N−1's edges, so an unmaterialized loop
         # re-executes all prior rounds multiple times each (the DAG
         # grows multiplicatively — the classic iterative-lineage trap;
         # same discipline as the base materialization above).
-        edges = nxt.localCheckpoint()
+        edges = peel_once(edges, _CORE_K).localCheckpoint()
     core_deg = edges.groupBy("src").agg(F.count("*").alias("d"))
     return core_deg.groupBy(
         (F.col("src") % 2).cast("bigint").alias("side")

@@ -1,5 +1,4 @@
-"""Scratch-path helper shared by the sources_io* / iterative plan
-modules.
+"""Scratch-path helper shared by the sources_io* plan modules.
 
 Lives in its own module (no ``register`` side effects) so that
 importing one plan module never transitively registers another's
@@ -7,9 +6,9 @@ queries — registration order is the driver's correctness window
 (see registry._load_all_plan_modules).
 
 The root is ONE config point (round-7 verdict order #5) so the
-100-TB story — iterative loop frames and io-roundtrip payloads living
-on a lake-backed scratch path (s3://…/tmp, hdfs://…/scratch) instead
-of local /tmp — is code, not a docstring. Resolution order, dearest
+100-TB story — io-roundtrip payloads living on a lake-backed scratch
+path (s3://…/tmp, hdfs://…/scratch) instead of local /tmp — is code,
+not a docstring. Resolution order, dearest
 first:
 
 1. active SparkSession conf ``spark.sms.scratch.root`` (runtime-
@@ -25,10 +24,6 @@ import os
 
 SCRATCH_CONF_KEY = "spark.sms.scratch.root"
 _DEFAULT_ROOT = "/tmp/sms_io"
-
-#: kept for backward compatibility with callers/tests that import it;
-#: prefer :func:`_root` which honors the conf/env override.
-_IO_ROOT = _DEFAULT_ROOT
 
 
 def _root() -> str:
@@ -51,12 +46,3 @@ def _scratch(sf_dir: str, name: str) -> str:
     tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
     return f"{_root()}/{tag}/{name}"
 
-
-def _scratch_run(sf_dir: str, name: str) -> str:
-    """Run-scoped scratch for ITERATIVE intermediates (g6's per-round
-    peel frames): namespaced by PID so two concurrent runs at the same
-    scale factor cannot clobber each other's loop state mid-iteration
-    (round-8 ADVICE). Roundtrip queries whose written payload IS the
-    thing under test keep the stable :func:`_scratch` layout."""
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    return f"{_root()}/run{os.getpid()}/{tag}/{name}"

@@ -3,9 +3,6 @@ retention curve — what fraction of the corpus survives near-dup
 collapse at increasing fingerprint-prefix granularities. The
 "how aggressive is my dedup" dial every corpus build tunes before
 committing to a threshold.
-
-Registered as a round-7 rotation candidate (plans/registry.py); until
-its driver row lands, the local oracle mirror proves it.
 """
 
 from __future__ import annotations

@@ -3,9 +3,6 @@ retrieval — the lexical-search scoring function behind every RAG
 retrieval baseline and data-curation "find documents like this query"
 pass; TF-IDF (l22) ranks terms within a doc, BM25 ranks DOCS for a
 query with tf saturation and length normalization.
-
-Registered as a round-7 rotation candidate (plans/registry.py); until
-its driver row lands, the local oracle mirror proves it.
 """
 
 from __future__ import annotations

@@ -2,9 +2,6 @@
 mining — which token pairs co-occur in documents far more than chance
 — the classic corpus-analysis primitive behind phrase detection,
 tokenizer-merge candidates, and topic drift diagnostics.
-
-Registered as a round-7 rotation candidate (plans/registry.py); until
-its driver row lands, the local oracle mirror proves it.
 """
 
 from __future__ import annotations

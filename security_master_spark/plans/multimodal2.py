@@ -9,10 +9,6 @@ DuckDB oracle recomputes every pixel closed-form in SQL without ever
 seeing a byte of BMP. A hash match certifies the decoder, the
 encoder, the padding/row-order handling, and the Arrow plumbing in
 one shot.
-
-Registered as a round-7 rotation candidate (plans/registry.py);
-until its driver row lands, the local oracle mirror + the byte-level
-codec unit tests (tests/test_operators.py round-trip suite) prove it.
 """
 
 from __future__ import annotations

@@ -2,9 +2,6 @@
 join — the "top-N per outer row" subquery shape (Spark 3.4+ lateral
 subquery support) that replaces the window-rank idiom when the inner
 query carries its own ORDER BY ... LIMIT.
-
-Registered as a round-7 rotation candidate (plans/registry.py); until
-its driver row lands, the local oracle mirror proves it.
 """
 
 from __future__ import annotations

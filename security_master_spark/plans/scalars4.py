@@ -5,9 +5,6 @@ CRASHES; ``try_add/try_subtract/try_multiply/try_divide/
 try_element_at`` convert exactly one expression to NULL-on-error
 without giving up ANSI's protection everywhere else — the surface this
 repo's round-6 division-hazard sweep (PLANS.md) leans on.
-
-Registered as a round-7 rotation candidate (plans/registry.py); until
-its driver row lands, the local oracle mirror proves it.
 """
 
 from __future__ import annotations

@@ -26,7 +26,7 @@ from security_master_spark.sources.io import (
     write_parquet_partitioned,
 )
 
-from security_master_spark.plans.io_scratch import _IO_ROOT, _scratch  # noqa: F401
+from security_master_spark.plans.io_scratch import _scratch
 
 
 _CUSTOMER_SCHEMA = (

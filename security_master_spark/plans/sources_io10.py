@@ -2,9 +2,6 @@
 roundtrip — the lake-format compression this repo's scale posture
 recommends over gzip (splittable pages, ~gzip ratio at several times
 the decode speed).
-
-Registered as a round-7 rotation candidate (plans/registry.py); until
-its driver row lands, the local oracle mirror proves it.
 """
 
 from __future__ import annotations

@@ -2,9 +2,6 @@
 the idempotent-backfill write mode every partitioned lakehouse job
 needs (re-run one day's pipeline, replace ONLY that day's
 partitions, leave the rest untouched).
-
-Registered as a round-7 rotation candidate (plans/registry.py); until
-its driver row lands, the local oracle mirror proves it.
 """
 
 from __future__ import annotations

@@ -2,9 +2,6 @@
 top-k trending — the foreachBatch leaderboard pattern (tumbling
 window → per-window rank → share of window), certified on the exact
 ``F.window`` bucketing the streaming job uses.
-
-Registered as a round-7 rotation candidate (plans/registry.py); until
-its driver row lands, the local oracle mirror proves it.
 """
 
 from __future__ import annotations

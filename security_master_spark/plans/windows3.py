@@ -1,9 +1,6 @@
 """Round-6 window batch 3 (SURVEY.md §2.5): IGNORE NULLS navigation —
 the SQL:2008 null-treatment clause on first/last/nth_value that turns
 a window into forward-fill / backward-fill / nth-observation lookup.
-
-Registered as a round-7 rotation candidate (plans/registry.py); until
-its driver row lands, the local oracle mirror proves it.
 """
 
 from __future__ import annotations

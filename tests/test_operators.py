@@ -863,23 +863,6 @@ def test_approx_percentile_within_tolerance(spark, sf_dir_mid):
         assert abs(a.approx_p95 - e.p95) / span <= 0.02
 
 
-def test_triangle_estimate_close_to_exact(spark, sf_dir_mid):
-    """g3's DOULION estimate must land within 15% of g2's
-    hash-certified exact triangle count (expected RSE ≈
-    sqrt(p^-3 / T) — well under that on the fixture graphs)."""
-    from security_master_spark.plans.registry import queries
-
-    qs = queries()
-    exact = qs["g2_triangle_count"](spark, sf_dir_mid).collect()[0][
-        "n_triangles"
-    ]
-    est = qs["g3_triangle_estimate"](spark, sf_dir_mid).collect()[0][
-        "triangle_estimate"
-    ]
-    assert exact > 0
-    assert abs(est - exact) / exact <= 0.15, (est, exact)
-
-
 def test_isin_luhn_on_real_world_identifiers(spark):
     """The generic expression-level ISIN validator must agree with
     published real-world check digits (ISO 6166 Luhn over the base-36

@@ -1,7 +1,6 @@
 """Round-5 hardening: regression tests for the ADVICE/VERDICT fixes —
-identifier character-class guards, w7's null-aware leave-one-out
-rewrite, d59's NULLIF-guarded denominator, the enforced
-transpose-small contract, and d47's basket-breadth cap.
+identifier character-class guards, the enforced transpose-small
+contract, and d47's basket-breadth cap.
 """
 
 from __future__ import annotations
@@ -53,50 +52,6 @@ def test_identifier_validators_reject_out_of_class_chars(spark):
         .v
     )
     assert ok is True
-
-
-def test_w7_leave_one_out_null_current_row(spark):
-    """A NULL current row must subtract nothing from either the sum or
-    the count: peer_mean is still the average of the non-null peers
-    (DuckDB's EXCLUDE CURRENT ROW semantics), not NULL."""
-    from pyspark.sql import Window
-
-    rows = [(1, 10.0), (2, None), (3, 30.0)]
-    df = spark.createDataFrame(rows, "id int, value double")
-    frame = Window.orderBy("id").rowsBetween(-10, 10)
-    x = F.col("value")
-    loo = F.try_divide(
-        F.sum("value").over(frame) - F.coalesce(x, F.lit(0.0)),
-        F.count("value").over(frame) - F.when(x.isNotNull(), 1).otherwise(0),
-    )
-    got = {r.id: r.m for r in df.select("id", loo.alias("m")).collect()}
-    # id=1: peers {None,30} -> 30; id=2 (NULL row): peers {10,30} -> 20;
-    # id=3: peers {10,None} -> 10.
-    assert got == {1: 30.0, 2: 20.0, 3: 10.0}
-
-
-def test_d59_zero_denominator_yields_null_not_crash(spark, tmp_path):
-    """Perfectly correlated (identical) return series make the
-    min-variance denominator v1+v2-2*c12 exactly 0 — the query must
-    return NULL weights, not raise DIVIDE_BY_ZERO."""
-    import datetime as dt
-
-    base = dt.datetime(2024, 1, 1)
-    rows = []
-    eid = 0
-    for etype in ("AAA", "BBB"):  # identical price paths
-        for d, px in enumerate([100.0, 101.0, 103.0, 102.0, 105.0]):
-            eid += 1
-            rows.append((eid, etype, base + dt.timedelta(days=d), px, "{}", 1))
-    df = spark.createDataFrame(
-        rows, "event_id long, event_type string, ts timestamp, "
-        "value double, props string, user_id long"
-    )
-    d = str(tmp_path / "sf_tiny")
-    df.write.parquet(f"{d}/events.parquet")
-    out = _Q["d59_min_variance_pairs"](spark, d).collect()
-    assert len(out) == 1
-    assert out[0]["w_a"] is None and out[0]["min_var_vol"] is None
 
 
 def test_transpose_small_guard_trips_on_unbounded_frame(spark, sf_dir):

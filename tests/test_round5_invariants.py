@@ -1,5 +1,5 @@
 """Structural invariants for the round-4-late operator batch
-(d50-d52, t5, w7/w8, l56/l57, g4/g5, a26, dq9) — properties the
+(d50-d52, t5, w7/w8, l56/l57, a26, dq9) — properties the
 value-hash mirror can't express: conservation laws, bounds, and
 cross-query consistency.
 """
@@ -97,37 +97,6 @@ def test_filter_funnel_stages_partition_docs(spark, sf_dir):
         )
 
 
-def test_link_prediction_scores_are_valid_jaccard(spark, sf_dir):
-    """0 < jaccard ≤ 1, pairs ordered s1<s2, descending score."""
-    rows = _Q["g4_link_prediction"](spark, sf_dir).collect()
-    assert rows
-    last = None
-    for r in rows:
-        assert r["s1"] < r["s2"]
-        assert 0.0 < r["jaccard"] <= 1.0
-        if last is not None:
-            assert r["jaccard"] <= last + 1e-12
-        last = r["jaccard"]
-
-
-def test_degree_histogram_counts_every_node(spark, sf_dir):
-    """Bucket counts sum to the distinct node count per side."""
-    hist = _Q["g5_degree_histogram"](spark, sf_dir)
-    got = {
-        r["side"]: r["n"]
-        for r in hist.groupBy("side").agg(F.sum("n_nodes").alias("n")).collect()
-    }
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    e = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .distinct()
-    )
-    assert got["customer"] == e.select("c").distinct().count()
-    assert got["supplier"] == e.select("s").distinct().count()
-
-
 def test_count_min_never_underestimates(spark, sf_dir):
     """The CMS overestimate is ≥ 0 for every probe key (the one-sided
     error guarantee), and ≤ 3·N/width + exact (loose deterministic
@@ -198,14 +167,6 @@ def test_exclude_current_row_equals_manual_loo(spark, sf_dir):
 # ---------------------------------------------------------------------------
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_g4_topk_plans_take_ordered_not_global_sort(spark, sf_dir):
-    """g4's final top-K must plan TakeOrderedAndProject (parallel
-    per-partition top-K + merge), never a single-partition global
-    sort."""
-    plan = _plan(_Q["g4_link_prediction"](spark, sf_dir))
-    assert "TakeOrderedAndProject" in plan, plan[:800]
 
 
 def test_io17_and_scalar_families_have_no_exchange(spark, sf_dir):

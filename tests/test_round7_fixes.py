@@ -171,56 +171,3 @@ def test_schema_cache_clear_hook(tmp_path, spark):
     datasets.clear_schema_cache()
     assert datasets.load_table(spark, d, "t").columns == ["b"]
     datasets.clear_schema_cache()  # leave no stale tmp keys behind
-
-
-# ------------------------------------------------------ g6 k-core
-
-
-def test_g6_peel_reaches_fixpoint_and_core_property(spark, sf_dir):
-    """The registered g6 semantic is the 4-round peel; at the oracle
-    SFs the peel must have CONVERGED (a 5th round changes nothing),
-    making the checked result the true k-core — and every surviving
-    node's in-core degree must be >= k."""
-    from pyspark.sql import functions as F
-
-    from security_master_spark.datasets import load_table
-    from security_master_spark.plans.graph3 import _CORE_K, _PEEL_ROUNDS
-
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    pairs = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).alias("c"),
-            (F.col("l_suppkey") * 2 + 1).alias("s"),
-        )
-        .distinct()
-    )
-    edges = pairs.select(
-        F.col("c").alias("src"), F.col("s").alias("dst")
-    ).unionAll(
-        pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
-    )
-
-    def peel_once(e):
-        deg = e.groupBy("src").agg(F.count("*").alias("d"))
-        keep = deg.filter(F.col("d") >= _CORE_K).select("src")
-        return e.join(keep, "src").join(
-            keep.withColumnRenamed("src", "dst"), "dst"
-        )
-
-    for _ in range(_PEEL_ROUNDS):
-        edges = peel_once(edges)
-    n4 = edges.count()
-    n5 = peel_once(edges).count()
-    assert n4 == n5, (
-        f"peel not converged after {_PEEL_ROUNDS} rounds "
-        f"({n4} -> {n5} edges): bump _PEEL_ROUNDS"
-    )
-    if n4:
-        min_deg = (
-            edges.groupBy("src").agg(F.count("*").alias("d"))
-            .agg(F.min("d"))
-            .first()[0]
-        )
-        assert min_deg >= _CORE_K

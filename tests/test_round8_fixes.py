@@ -1,7 +1,6 @@
 """Round-8 fix regressions: the configurable scratch root (round-7
 verdict order #5 — the 100-TB lake-backed-scratch story must be code,
-not a docstring) and the PID-namespaced iterative scratch (round-8
-ADVICE: concurrent same-SF runs clobbered g6's per-round loop state).
+not a docstring).
 """
 
 from __future__ import annotations
@@ -12,7 +11,6 @@ from security_master_spark.plans.io_scratch import (
     SCRATCH_CONF_KEY,
     _root,
     _scratch,
-    _scratch_run,
 )
 
 
@@ -21,6 +19,7 @@ def test_scratch_root_is_one_config_point(spark, tmp_path, monkeypatch):
     # SAME resolver every scratch-writing plan imports.
     default = _root()
     assert default == "/tmp/sms_io"
+    assert _scratch("/data/sf0.01", "x") == "/tmp/sms_io/sf0.01/x"
 
     monkeypatch.setenv("SPARK_GRAFT_SCRATCH_ROOT", "/lake/scratch/")
     assert _root() == "/lake/scratch"  # env override, slash-normalized
@@ -54,18 +53,4 @@ def test_scratch_conf_redirects_a_real_plan_write(
         assert (root / tag / "lineitem_zstd").is_dir()
     finally:
         spark.conf.unset(SCRATCH_CONF_KEY)
-
-
-def test_iterative_scratch_is_run_scoped():
-    # Iterative per-round scratch frames (the g6 shape before its
-    # round-15 localCheckpoint rewrite; the helper remains the
-    # lake-scratch spelling for iterative loops) must not collide
-    # across concurrent runs at the same scale factor: the path
-    # embeds the PID.
-    p = _scratch_run("/data/sf0.01", "kcore_edges_r1")
-    assert f"/run{os.getpid()}/" in p
-    assert p.endswith("/sf0.01/kcore_edges_r1")
-    # and the stable roundtrip layout is unchanged
-    assert _scratch("/data/sf0.01", "x") == "/tmp/sms_io/sf0.01/x"
-
 

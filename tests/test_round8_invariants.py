@@ -149,20 +149,6 @@ def test_dq14_staleness_gaps_ordered(spark, sf_dir):
         assert 0 <= r.median_gap_s <= r.max_gap_s
 
 
-def test_g6_kcore_fixpoint_reached_on_fixture(spark, sf_dir):
-    """After the peel rounds every surviving node must have in-core
-    degree ≥ k (=8): the peel actually reached its fixpoint on the
-    fixture graph, so the published floor is the k-core's, not a
-    half-peeled remnant's."""
-    from security_master_spark.plans.graph3 import _CORE_K
-
-    rows = _Q["g6_kcore_peel"](spark, sf_dir).collect()
-    for r in rows:
-        if r.n_core_nodes:
-            assert r.min_core_degree >= _CORE_K
-            assert r.core_degree_sum >= _CORE_K * r.n_core_nodes
-
-
 def test_dq15_detects_planted_replay_across_buckets(spark, tmp_path):
     """Planted replay pairs: one pair 1 s apart inside a bucket, one
     pair straddling a 60 s bucket boundary (the next-bucket explode
