@@ -1,10 +1,9 @@
 """Shared daily-close / daily-return builders for the securities
 plans (d62's proven discipline, reused by d65-d70).
 
-Lives under functions/ (not plans/) so multiple plan modules can share
-it WITHOUT cross-plan module-scope imports — those splice the imported
-module's registrations into the registry head and break the driver's
-~50-entry rotation order (see plans/registry.py).
+Lives under functions/ (not plans/) because the plan modules of
+several subjects share it: plan modules hold queries, and their
+shared helpers live in functions/ or operators/.
 """
 
 from __future__ import annotations

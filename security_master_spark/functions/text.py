@@ -25,12 +25,9 @@ STOPWORDS: dict[str, tuple[str, ...]] = {
 
 def stopword_rows() -> list[tuple[str, str]]:
     """STOPWORDS flattened to (lang, word) rows — shared by the l9 /
-    l55 Spark lexicon frames and their DuckDB oracle VALUES lists.
-    Lives here (not in plans.llm) so plan modules can build oracle
-    strings at import time without importing another plan module and
-    perturbing the registry's registration order (a module-scope
-    cross-plan import registers the imported module's queries at that
-    point)."""
+    l55 Spark lexicon frames and their DuckDB oracle VALUES lists, which
+    are built when the plan module is imported. Lives here with the
+    lexicon it flattens."""
     return [(lang, w) for lang, words in STOPWORDS.items() for w in words]
 
 

@@ -20,7 +20,7 @@ Lineage is truncated with ``localCheckpoint`` every round so the plan
 stays O(1) deep (on a cluster use ``checkpoint`` with a checkpoint dir
 for fault tolerance). The fixed point is the same min-label state:
 ``component`` = minimum node id reachable, matching the recursive-CTE
-oracle in plans/llm.py:l16_dedup_clusters.
+oracle in plans/llm_dedup.py:l16_dedup_clusters.
 """
 
 from __future__ import annotations

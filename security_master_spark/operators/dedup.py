@@ -364,8 +364,8 @@ def simhash_fp_ctes() -> str:
     module) so plan modules can embed it in oracle strings at import
     time without importing another plan module (which would splice
     registrations into the registry head — see plans/registry.py).
-    Used by the l8 oracle (plans/llm.py) and the l60 dedup-retention
-    oracle (plans/llm13.py)."""
+    Used by the l8 oracle and the l60 dedup-retention oracle
+    (plans/llm_dedup.py)."""
     votes = []
     for b in range(64):
         i, k = divmod(b, 4)

@@ -1,5 +1,5 @@
 """Exact recursive EWMA — the sequential sibling of the distributed
-truncated-lag form in plans/domain3.py:d16_ewma.
+truncated-lag form in plans/domain_indicators.py:d16_ewma.
 
 The recurrence y_t = y_{t-1} + α'(x_t − y_{t-1}) cannot be expressed
 as a Spark window aggregate (each output depends on the previous

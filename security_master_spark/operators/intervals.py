@@ -99,7 +99,7 @@ def near_duplicate_pairs(
 ) -> DataFrame:
     """Pairs of DISTINCT rows sharing ``keys`` whose timestamps lie
     within ``window_us`` of each other — the dq15 near-time duplicate
-    screen (plans/dataquality6.py) as a library operator, plus the
+    screen (plans/dataquality.py) as a library operator, plus the
     density cap that bounds its one documented scale hazard.
 
     Shape (the d2 interval-join algebra): rows bucket by

@@ -41,7 +41,7 @@ def pct_change(
     """Per-key period-over-period relative change (simple returns).
     try_divide: a zero prior value yields NULL instead of aborting under
     ANSI mode — zero closes occur in the data from sf0.1 up (same fix
-    as the plans/domain.py return computations)."""
+    as the plans/domain_ticks.py return computations)."""
     w = _series_window(keys, ts)
     prev = F.lag(col).over(w)
     return df.withColumn(out_col, F.try_divide(F.col(col) - prev, prev))

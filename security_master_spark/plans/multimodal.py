@@ -19,8 +19,15 @@ from pyspark.sql.functions import pandas_udf
 from security_master_spark.datasets import load_table
 from security_master_spark.functions.rounding import dround, sql_dround
 from security_master_spark.multimodal.binary import (
+    FRAME_HOP,
+    FRAME_LEN,
+    TILE_PX,
     attach_payload,
+    audio_frame_stats,
+    audio_sample_stats,
     extract_features,
+    image_pixel_stats,
+    image_tile_stats,
     sample_frames,
 )
 from security_master_spark.plans.registry import register
@@ -148,4 +155,259 @@ def m4_modality_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
         dround(
             F.avg((F.col("width") * F.col("height")).cast("double")), 4
         ).alias("avg_pixels"),
+    )
+
+
+#: image dimensions derived from doc_id: width 8..23, height 8..19 —
+#: small enough that the oracle's pixel grid stays tiny, large enough
+#: to exercise every BMP row-padding case (3*w % 4 cycles 0,1,2,3).
+_N_DOCS = 300
+
+
+@register(
+    "m5_image_decode_stats",
+    oracle=f"""
+    WITH d AS (
+        SELECT doc_id,
+               CAST(doc_id % 16 + 8 AS INT) AS width,
+               CAST(doc_id % 12 + 8 AS INT) AS height
+        FROM documents WHERE doc_id < {_N_DOCS}
+    ), px AS (
+        SELECT d.doc_id, d.width, d.height,
+               (3 * x.range + 7 * y.range + d.doc_id) % 256 AS r,
+               (5 * x.range + 11 * y.range + 2 * d.doc_id) % 256 AS g,
+               (x.range * y.range + 3 * d.doc_id) % 256 AS b
+        FROM d, range(24) x, range(20) y
+        WHERE x.range < d.width AND y.range < d.height
+    )
+    SELECT doc_id, width, height,
+           CAST(COUNT(*) AS BIGINT) AS n_pixels,
+           CAST(SUM(r) AS BIGINT) AS sum_r,
+           CAST(SUM(g) AS BIGINT) AS sum_g,
+           CAST(SUM(b) AS BIGINT) AS sum_b,
+           {sql_dround("SUM(r) / CAST(COUNT(*) AS DOUBLE)", 6)} AS mean_r,
+           {sql_dround("SUM(g) / CAST(COUNT(*) AS DOUBLE)", 6)} AS mean_g,
+           {sql_dround("SUM(b) / CAST(COUNT(*) AS DOUBLE)", 6)} AS mean_b
+    FROM px
+    GROUP BY doc_id, width, height
+    """,
+)
+def m5_image_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Image decode, for real: documents → per-doc test-card BMP bytes
+    (mapInPandas encode) → Arrow batch of binary blobs → pure-Python
+    BMP parse (mapInPandas decode) → per-channel pixel sums → means.
+
+    The oracle never decodes anything — it regenerates the pixel
+    lattice algebraically — so agreement proves the BYTES round-trip:
+    BGR ordering, bottom-up rows, and 4-byte row padding (width 8..23
+    cycles through all four padding residues) all have to be exactly
+    right for the sums to match.
+
+    Scale: two map-only Arrow stages, zero shuffles before the final
+    narrow projection; decode cost is per-row bounded and the blob
+    column prunes away for queries that don't touch it."""
+    docs = load_table(spark, sf_dir, "documents")
+    dims = docs.filter(F.col("doc_id") < _N_DOCS).select(
+        "doc_id",
+        (F.col("doc_id") % 16 + 8).cast("int").alias("width"),
+        (F.col("doc_id") % 12 + 8).cast("int").alias("height"),
+    )
+    stats = image_pixel_stats(dims)
+    n = F.col("n_pixels").cast("double")  # >= 64 by construction
+    return stats.select(
+        "doc_id",
+        "width",
+        "height",
+        "n_pixels",
+        "sum_r",
+        "sum_g",
+        "sum_b",
+        dround(F.col("sum_r") / n, 6).alias("mean_r"),
+        dround(F.col("sum_g") / n, 6).alias("mean_g"),
+        dround(F.col("sum_b") / n, 6).alias("mean_b"),
+    )
+
+
+@register(
+    "m6_audio_decode_stats",
+    oracle=f"""
+    WITH d AS (
+        SELECT doc_id, CAST(400 + doc_id % 100 AS BIGINT) AS n
+        FROM documents WHERE doc_id < {_N_DOCS}
+    ), idx AS (
+        SELECT doc_id, n, UNNEST(generate_series(0, n - 1)) AS i FROM d
+    ), samp AS (
+        SELECT doc_id, n, (7 * i + 13 * doc_id) % 65536 - 32768 AS s
+        FROM idx
+    )
+    SELECT doc_id,
+           CAST(8000 AS INT) AS sample_rate,
+           CAST(MAX(n) AS BIGINT) AS n_samples,
+           CAST(SUM(s) AS BIGINT) AS sum_amp,
+           CAST(SUM(s * s) AS BIGINT) AS sum_sq,
+           CAST(MAX(ABS(s)) AS INT) AS peak
+    FROM samp
+    GROUP BY doc_id
+    """,
+)
+def m6_audio_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Audio decode, for real — the WAV twin of m5: documents →
+    deterministic int16 test tone → RIFF/WAVE PCM bytes (mapInPandas
+    encode) → Arrow batch of binary blobs → chunk-walking WAV parse
+    (mapInPandas decode) → exact integer sample statistics. The
+    oracle regenerates every sample closed-form, so a hash match
+    certifies the RIFF chunk walk, the little-endian int16 layout,
+    and the Arrow transport — never trusting the encoder.
+
+    Exact-integer outputs (sum, sum of squares, peak) rather than
+    float RMS keep the cross-engine compare bit-exact; a consumer
+    derives rms = sqrt(sum_sq/n) driver-side for free.
+
+    Scale: identical posture to m5 — two map-only Arrow stages, no
+    shuffle, memory bounded by batch height × blob size."""
+    docs = load_table(spark, sf_dir, "documents")
+    lens = docs.filter(F.col("doc_id") < _N_DOCS).select(
+        "doc_id",
+        (F.lit(400) + F.col("doc_id") % 100).cast("long").alias("n_samples"),
+    )
+    return audio_sample_stats(lens)
+
+
+#: doc slice (same as m5 — keeps the tiled pixel lattice bounded)
+
+
+@register(
+    "m7_image_tiling",
+    oracle=f"""
+    WITH d AS (
+        SELECT doc_id,
+               CAST(doc_id % 16 + 8 AS INT) AS width,
+               CAST(doc_id % 12 + 8 AS INT) AS height
+        FROM documents WHERE doc_id < {_N_DOCS}
+    ), px AS (
+        SELECT d.doc_id,
+               CAST(x.range // {TILE_PX} AS INT) AS tile_x,
+               CAST(y.range // {TILE_PX} AS INT) AS tile_y,
+               (3 * x.range + 7 * y.range + d.doc_id) % 256 AS r,
+               (5 * x.range + 11 * y.range + 2 * d.doc_id) % 256 AS g,
+               (x.range * y.range + 3 * d.doc_id) % 256 AS b
+        FROM d, range(24) x, range(20) y
+        WHERE x.range < d.width AND y.range < d.height
+    )
+    SELECT doc_id, tile_x, tile_y,
+           CAST(COUNT(*) AS BIGINT) AS n_px,
+           CAST(SUM(r) AS BIGINT) AS sum_r,
+           CAST(SUM(g) AS BIGINT) AS sum_g,
+           CAST(SUM(b) AS BIGINT) AS sum_b,
+           {sql_dround("SUM(r) / CAST(COUNT(*) AS DOUBLE)", 6)}
+               AS mean_r
+    FROM px
+    GROUP BY doc_id, tile_x, tile_y
+    """,
+)
+def m7_image_tiling(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Image tiling: documents → test-card BMP bytes (mapInPandas
+    encode) → pure-Python decode → 4×4 ViT-style patch grid with
+    per-patch channel sums — the preprocessing plumbing under every
+    vision-transformer ingest job. Edge patches are PARTIAL (widths
+    8..23 and heights 8..19 are mostly not multiples of 4), and the
+    oracle regenerates the whole tiled lattice closed-form, so tile
+    boundary arithmetic, BGR ordering, bottom-up rows, and row
+    padding must all be exactly right for ~20k patch rows to hash.
+
+    Scale: two map-only Arrow stages (no shuffle before the final
+    projection); the patch reduce happens INSIDE the decode batch, so
+    what leaves Python is the (doc, tile) grid — ~35× smaller than
+    the pixel lattice — never raw pixels."""
+    docs = load_table(spark, sf_dir, "documents")
+    dims = docs.filter(F.col("doc_id") < _N_DOCS).select(
+        "doc_id",
+        (F.col("doc_id") % 16 + 8).cast("int").alias("width"),
+        (F.col("doc_id") % 12 + 8).cast("int").alias("height"),
+    )
+    tiles = image_tile_stats(dims)
+    return tiles.select(
+        "doc_id",
+        "tile_x",
+        "tile_y",
+        "n_px",
+        "sum_r",
+        "sum_g",
+        "sum_b",
+        dround(
+            F.col("sum_r") / F.col("n_px").cast("double"), 6
+        ).alias("mean_r"),
+    )
+
+
+#: doc slice (same as m6 — tones of 400..499 samples → 2 full frames)
+
+
+@register(
+    "m8_audio_framing",
+    oracle=f"""
+    WITH d AS (
+        SELECT doc_id, CAST(400 + doc_id % 100 AS BIGINT) AS n
+        FROM documents WHERE doc_id < {_N_DOCS}
+    ), frames AS (
+        SELECT doc_id, n,
+               UNNEST(generate_series(0,
+                   (n - {FRAME_LEN}) // {FRAME_HOP})) AS f
+        FROM d WHERE n >= {FRAME_LEN}
+    ), samp AS (
+        SELECT fr.doc_id, fr.f,
+               (7 * (fr.f * {FRAME_HOP} + i.i) + 13 * fr.doc_id)
+                   % 65536 - 32768 AS s
+        FROM frames fr,
+             (SELECT UNNEST(generate_series(0, {FRAME_LEN - 1})) AS i) i
+    )
+    SELECT doc_id,
+           CAST(f AS INT) AS frame_idx,
+           CAST({FRAME_LEN} AS INT) AS n_samp,
+           CAST(SUM(s) AS BIGINT) AS sum_amp,
+           CAST(SUM(s * s) AS BIGINT) AS sum_sq,
+           CAST(MAX(ABS(s)) AS INT) AS peak,
+           {sql_dround(
+               f"SQRT(SUM(s * s) / CAST({FRAME_LEN} AS DOUBLE))", 6
+           )} AS rms
+    FROM samp
+    GROUP BY doc_id, f
+    """,
+)
+def m8_audio_framing(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Audio framing: documents → test-tone WAV bytes (mapInPandas
+    encode) → RIFF chunk-walk decode → overlapping 256-sample frames
+    at hop 128 (50% overlap, the STFT default) with exact integer
+    energy stats + RMS per frame — the front end of every
+    spectrogram/VAD/diarization pipeline, and the audio twin of m7's
+    patch grid. Full frames only; the oracle regenerates every frame
+    closed-form from the tone formula, so hop arithmetic, overlap
+    membership, and tail truncation must all be exactly right.
+
+    Scale: two map-only Arrow stages, zero shuffles; what leaves
+    Python is the frame grid (~2 rows/doc here; at 16 kHz speech,
+    ~125 rows/s of audio), never raw samples. Integer sums are exact
+    — only the final RMS touches floats, IEEE-pinned on both
+    engines."""
+    docs = load_table(spark, sf_dir, "documents")
+    lens = docs.filter(F.col("doc_id") < _N_DOCS).select(
+        "doc_id",
+        (F.lit(400) + F.col("doc_id") % 100)
+        .cast("long")
+        .alias("n_samples"),
+    )
+    frames = audio_frame_stats(lens)
+    return frames.select(
+        "doc_id",
+        "frame_idx",
+        "n_samp",
+        "sum_amp",
+        "sum_sq",
+        "peak",
+        dround(
+            F.sqrt(
+                F.col("sum_sq").cast("double") / F.lit(float(FRAME_LEN))
+            ),
+            6,
+        ).alias("rms"),
     )

@@ -13,10 +13,14 @@ rows-only check (reserved for genuinely non-SQL-expressible ops).
 
 from __future__ import annotations
 
+import importlib
+import pkgutil
 from collections.abc import Callable
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
+
+from security_master_spark import plans
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -39,124 +43,13 @@ def register(name: str, oracle: Optional[str] = None) -> Callable[[QueryFn], Que
 
 
 def _load_all_plan_modules() -> None:
-    # Import for registration side effects. queries()/oracle_sql() put
-    # DRIVER_WINDOW first; the rest follow in the registration order
-    # this import list sets.
-    from security_master_spark.plans import (  # noqa: F401
-        domain9,
-        llm10,
-        relational3,
-        udfs3,
-        sources_io7,
-        aggregates5,
-        llm11,
-        domain10,
-        domain11,
-        domain12,
-        llm12,
-        graph2,
-        udfs4,
-        aggregates6,
-        streaming_batch2,
-        dataquality2,
-        udfs5,
-        sources_io8,
-        scalars3,
-        dataquality3,
-        relational4,
-        multimodal2,
-        domain13,
-        aggregates7,
-        llm13,
-        relational5,
-        sources_io9,
-        dataquality4,
-        domain14,
-        windows3,
-        scalars4,
-        domain15,
-        llm14,
-        domain16,
-        llm15,
-        domain17,
-        streaming_batch3,
-        relational6,
-        domain18,
-        sources_io10,
-        domain19,
-        domain20,
-        windows4,
-        aggregates8,
-        dataquality5,
-        llm16,
-        relational7,
-        multimodal3,
-        domain21,
-        scalars5,
-        sources_io11,
-        udfs6,
-        domain22,
-        graph3,
-        sources_io12,
-        aggregates9,
-        llm17,
-        udfs7,
-        domain23,
-        multimodal4,
-        domain24,
-        dataquality6,
-        domain25,
-        domain26,
-        sources_io13,
-        llm18,
-        domain27,
-        sources_io14,
-        llm19,
-        domain28,
-        dataquality7,
-        llm20,
-        windows5,
-        relational8,
-        domain7,
-        llm7,
-        aggregates3,
-        sources_io5,
-        llm8,
-        udfs2,
-        sources_io6,
-        scalars2,
-        domain8,
-        llm9,
-        aggregates4,
-        relational2,
-        graph,
-        dataquality,
-        windows2,
-        domain4,
-        llm4,
-        sources_io3,
-        domain5,
-        llm5,
-        domain6,
-        llm6,
-        aggregates2,
-        sources_io4,
-        relational,
-        windows,
-        udfs,
-        multimodal,
-        streaming_batch,
-        domain2,
-        llm2,
-        sources_io2,
-        domain3,
-        llm3,
-        aggregates,
-        scalars,
-        domain,
-        llm,
-        sources_io,
-    )
+    # Import every plan module for its register side effects, in sorted
+    # name order. queries()/oracle_sql() put DRIVER_WINDOW first; the
+    # rest follow in the registration order this sets.
+    for info in sorted(pkgutil.iter_modules(plans.__path__), key=lambda m: m.name):
+        if info.name != "registry":
+            importlib.import_module(f"{plans.__name__}.{info.name}")
+
 
 #: The driver's correctness harness checks the first 50 entries of
 #: queries() each round, so this pin decides which plans earn fresh

@@ -522,3 +522,397 @@ def s17_null_handling(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.ifnull(F.col("bal"), F.lit(0.0)) + F.coalesce(F.col("bal"), F.lit(0.0))).alias("bal_doubled"),
         )
     )
+
+
+@register(
+    "s18_variant_type",
+    oracle=f"""
+    SELECT event_type,
+           CAST(COUNT(*) AS BIGINT) AS n,
+           CAST(SUM(CAST(props::JSON ->> 'k' AS INT)) AS BIGINT) AS sum_k,
+           {sql_dround("AVG(CAST(props::JSON ->> 'k' AS INT))", 6)} AS avg_k,
+           CAST(COUNT(CAST(props::JSON ->> 'missing' AS INT)) AS BIGINT)
+               AS n_missing
+    FROM events
+    GROUP BY event_type
+    """,
+)
+def s18_variant_type(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spark 4 VARIANT: parse the JSON props column ONCE into the
+    binary variant encoding, then extract typed fields with
+    try_variant_get — the schema-on-read path that replaces
+    per-extraction JSON string re-parsing (the s7 get_json_object
+    style re-tokenizes the string per field; variant parses once and
+    navigates an encoded tree, the same trade Parquet VARIANT
+    shredding banks on at scale). A missing path returns NULL rather
+    than erroring (n_missing certifies that on every row), and the
+    extraction + aggregation stay in one codegen hash-agg pass."""
+    events = load_table(spark, sf_dir, "events")
+    v = F.parse_json(F.col("props"))
+    k = F.try_variant_get(v, "$.k", "int")
+    missing = F.try_variant_get(v, "$.missing", "int")
+    return events.groupBy("event_type").agg(
+        F.count("*").cast("bigint").alias("n"),
+        F.sum(k).cast("bigint").alias("sum_k"),
+        dround(F.avg(k), 6).alias("avg_k"),
+        F.count(missing).cast("bigint").alias("n_missing"),
+    )
+
+
+#: mixed-case segment dim — the case mismatch vs the fixture's
+#: uppercase c_mktsegment is the POINT: only a case-insensitive
+#: comparison matches anything.
+_SEGMENT_TIERS = [
+    ("Building", "brick"),
+    ("Automobile", "mobile"),
+    ("Machinery", "industrial"),
+    ("Household", "consumer"),
+    ("Furniture", "consumer"),
+]
+
+
+@register(
+    "s19_collation",
+    oracle=f"""
+    WITH tiers(label, tier) AS (
+        VALUES {", ".join(f"('{label}', '{tier}')" for label, tier in _SEGMENT_TIERS)}
+    )
+    SELECT t.tier,
+           CAST(COUNT(*) AS BIGINT) AS n_customers,
+           {sql_dround("AVG(c.c_acctbal)", 6)} AS avg_acctbal
+    FROM customer c
+    JOIN tiers t ON lower(c.c_mktsegment) = lower(t.label)
+    GROUP BY t.tier
+    """,
+)
+def s19_collation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spark 4 collations: join the fixture's UPPERCASE market
+    segments against a Mixed-Case dimension under UTF8_LCASE — the
+    collation does real work here (a case-sensitive join would match
+    ZERO rows), and unlike a lower()-both-sides rewrite the collated
+    comparison keeps the join an ordinary equi-join the planner can
+    broadcast, with the case rule carried by the TYPE rather than
+    re-spelled at every call site (exactly how analysts stop writing
+    lower() bugs). The oracle mirrors with lower() since DuckDB
+    expresses the same rule functionally."""
+    cust = load_table(spark, sf_dir, "customer")
+    tiers = spark.createDataFrame(_SEGMENT_TIERS, ["label", "tier"])
+    joined = cust.join(
+        F.broadcast(tiers),
+        F.collate(cust.c_mktsegment, "UTF8_LCASE")
+        == F.collate(tiers.label, "UTF8_LCASE"),
+    )
+    return joined.groupBy("tier").agg(
+        F.count("*").cast("bigint").alias("n_customers"),
+        dround(F.avg("c_acctbal"), 6).alias("avg_acctbal"),
+    )
+
+
+# Oracle discipline: the URLs are constructed IN the query from fixture
+# columns, so DuckDB never needs a URL parser — it derives each
+# component independently from the same source columns. A hash match
+# therefore certifies Spark's parser against ground truth, not against
+# another parser's quirks.
+
+
+@register(
+    "s20_url_functions",
+    oracle="""
+    SELECT doc_id,
+           source || '.example.com' AS host,
+           '/' || lang || '/doc/' || CAST(doc_id AS VARCHAR) AS path,
+           'q=' || CAST(n_chars AS VARCHAR) AS query,
+           CAST(n_chars AS VARCHAR) AS q_param,
+           lang AS roundtrip_lang
+    FROM documents
+    """,
+)
+def s20_url_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """URL scalar functions: build a URL from fixture columns, then
+    recover host / path / full query / a single query parameter with
+    ``parse_url``, plus a ``url_decode(url_encode(x))`` identity. The
+    oracle reconstructs every component straight from the source
+    columns — ground truth, not a second parser — so the hash match
+    certifies Spark's extraction exactly. All JVM expressions in the
+    scan projection; zero shuffles (the per-host groupBys these feed
+    are l41/l57-shaped rollups)."""
+    docs = load_table(spark, sf_dir, "documents")
+    url = F.concat(
+        F.lit("https://"),
+        F.col("source"),
+        F.lit(".example.com/"),
+        F.col("lang"),
+        F.lit("/doc/"),
+        F.col("doc_id").cast("string"),
+        F.lit("?q="),
+        F.col("n_chars").cast("string"),
+    )
+    return docs.select(
+        "doc_id",
+        F.parse_url(url, F.lit("HOST")).alias("host"),
+        F.parse_url(url, F.lit("PATH")).alias("path"),
+        F.parse_url(url, F.lit("QUERY")).alias("query"),
+        F.parse_url(url, F.lit("QUERY"), F.lit("q")).alias("q_param"),
+        F.url_decode(F.url_encode("lang")).alias("roundtrip_lang"),
+    )
+
+
+@register(
+    "s21_data_protection",
+    oracle="""
+    SELECT c_custkey,
+           regexp_replace(regexp_replace(regexp_replace(c_name,
+               '[A-Z]', 'X', 'g'), '[a-z]', 'x', 'g'), '[0-9]', 'n', 'g')
+               AS masked_name,
+           c_name AS decrypted_name
+    FROM customer
+    """,
+)
+def s21_data_protection(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Column-level data protection: ``mask`` (upper→X, lower→x,
+    digit→n — the redacted-display form PII policies mandate) and an
+    ``aes_decrypt(aes_encrypt(x, k), k)`` roundtrip (AES-GCM, the
+    at-rest column-encryption primitive). The mask oracle derives the
+    same redaction from three regexp passes — ground truth per the
+    documented character classes; the encryption oracle is the
+    identity (GCM ciphertext is IV-randomized, so only the roundtrip
+    is deterministic — which is also the only part with portable
+    semantics). Both are JVM expressions in the scan projection; the
+    AES pair stays inside whole-stage codegen, so "encrypted at rest,
+    decrypted in the projection" costs no extra pass."""
+    cust = load_table(spark, sf_dir, "customer")
+    key = F.lit("0123456789abcdef")
+    return cust.select(
+        "c_custkey",
+        F.mask("c_name").alias("masked_name"),
+        F.aes_decrypt(F.aes_encrypt(F.col("c_name"), key), key)
+        .cast("string")
+        .alias("decrypted_name"),
+    )
+
+
+@register(
+    "s22_outer_explode",
+    oracle="""
+    SELECT doc_id,
+           CASE WHEN n_chars >= 250 THEN NULL ELSE 'short' END AS tag
+    FROM documents
+    """,
+)
+def s22_outer_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``explode_outer``: the empty-collection-preserving explode.
+    Documents get a tag array that is EMPTY for long docs ('short'
+    only below the length cutoff); a plain ``explode`` silently drops
+    every long doc from the output — the classic row-loss bug in
+    tag/entity pipelines — while ``explode_outer`` keeps them with a
+    NULL element. The oracle derives the expected (doc, tag-or-NULL)
+    rows closed-form, so the hash certifies exactly the preserved
+    rows. Pure projection + generator in one codegen stage, no
+    shuffle."""
+    docs = load_table(spark, sf_dir, "documents")
+    tags = F.when(
+        F.col("n_chars") < 250, F.array(F.lit("short"))
+    ).otherwise(F.array().cast("array<string>"))
+    return docs.select(
+        "doc_id", F.explode_outer(tags).alias("tag")
+    )
+
+
+@register(
+    "s23_map_higher_order",
+    oracle="""
+    SELECT doc_id,
+           'LANG=' || lang AS lang_entry,
+           n_chars * 2 AS doubled_chars,
+           CAST(LENGTH(text) >= 250 AS BIGINT) AS n_long_flags
+    FROM documents
+    """,
+)
+def s23_map_higher_order(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Map higher-order functions — ``transform_keys``,
+    ``transform_values``, ``map_filter`` — exercised on a map built
+    from fixture columns and read back out to scalars so DuckDB can
+    derive every output closed-form from the SOURCE columns (ground
+    truth; DuckDB's map surface differs too much to mirror the calls
+    themselves). transform_keys upcases the key ('LANG=' prefix),
+    transform_values doubles the metric, map_filter keeps only
+    entries whose value clears the length cutoff (count of survivors
+    returned). All three stay JVM-side generator-free expressions in
+    one projection."""
+    docs = load_table(spark, sf_dir, "documents")
+    m = F.create_map(F.lit("lang"), F.col("lang"))
+    metrics = F.create_map(F.lit("chars"), F.col("n_chars"))
+    lens = F.create_map(F.lit("len"), F.length("text").cast("bigint"))
+    return docs.select(
+        "doc_id",
+        F.element_at(
+            F.transform_keys(m, lambda k, _v: F.concat(F.upper(k), F.lit("="))),
+            "LANG=",
+        ).alias("lang_entry_raw"),
+        F.element_at(
+            F.transform_values(metrics, lambda _k, v: v * 2), "chars"
+        ).alias("doubled_chars"),
+        F.size(
+            F.map_filter(lens, lambda _k, v: v >= 250)
+        ).cast("bigint").alias("n_long_flags"),
+    ).select(
+        "doc_id",
+        F.concat(F.lit("LANG="), F.col("lang_entry_raw")).alias("lang_entry"),
+        "doubled_chars",
+        "n_long_flags",
+    )
+
+
+#: 3037000499² — the largest perfect square below 2^63: ×1 fits a
+#: BIGINT, ×2 overflows. The boundary that makes overflow DATA-
+#: dependent rather than constant-foldable.
+_NEAR_MAX = 9223372030926249001
+_MAX64 = 9223372036854775807
+
+
+@register(
+    "s24_try_arithmetic",
+    oracle=f"""
+    SELECT s_suppkey,
+           CASE WHEN s_suppkey <= 1
+                THEN s_suppkey * {_NEAR_MAX} END AS mult_guarded,
+           CASE WHEN s_suppkey <= 7
+                THEN {_MAX64 - 7} + s_suppkey END AS add_guarded,
+           CASE WHEN s_suppkey <= 8
+                THEN {-_MAX64 - 1 + 8} - s_suppkey END AS sub_guarded,
+           {sql_dround(
+               "CAST(s_acctbal AS DOUBLE) / NULLIF(s_suppkey % 3, 0)", 6
+           )} AS div_guarded,
+           (string_split(s_name, '#'))[2] AS seg2,
+           (string_split(s_name, '#'))[10] AS seg10
+    FROM supplier
+    """,
+)
+def s24_try_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ``try_*`` family at its decision boundaries: a multiply
+    whose operand crosses 2^63 exactly at s_suppkey = 2, an add/
+    subtract pair straddling ±2^63 within the first few keys, a
+    modulo-zero division, and out-of-bounds element access — each
+    NULL where ANSI would crash, value-exact elsewhere. The oracle
+    spells every boundary analytically (CASE on the key ranges), so
+    the hash certifies WHERE the error→NULL transition happens, not
+    just that errors vanish.
+
+    Scale: pure scan projection; the point is semantic — at 100 TB a
+    single bad row must cost one NULL, not the job, and the sweep
+    policy (PLANS.md round 6) routes every data-derived hazard
+    through these functions."""
+    supp = load_table(spark, sf_dir, "supplier")
+    return supp.select(
+        "s_suppkey",
+        F.try_multiply(F.col("s_suppkey"), F.lit(_NEAR_MAX)).alias(
+            "mult_guarded"
+        ),
+        F.try_add(F.lit(_MAX64 - 7), F.col("s_suppkey")).alias(
+            "add_guarded"
+        ),
+        F.try_subtract(
+            F.lit(-_MAX64 - 1 + 8), F.col("s_suppkey")
+        ).alias("sub_guarded"),
+        dround(
+            F.try_divide(
+                F.col("s_acctbal").cast("double"), F.col("s_suppkey") % 3
+            ),
+            6,
+        ).alias("div_guarded"),
+        F.try_element_at(F.split("s_name", "#"), F.lit(2)).alias("seg2"),
+        F.try_element_at(F.split("s_name", "#"), F.lit(10)).alias(
+            "seg10"
+        ),
+    )
+
+
+@register(
+    "s25_calendar_arithmetic",
+    oracle="""
+    SELECT o_orderkey,
+           CAST(o_orderdate AS DATE) AS order_date,
+           CAST(CAST(o_orderdate AS DATE) + INTERVAL 1 MONTH AS DATE)
+               AS next_month,
+           CAST(CAST(o_orderdate AS DATE) - INTERVAL 3 MONTH AS DATE)
+               AS prior_quarter,
+           CAST(CAST(o_orderdate AS DATE) +
+                (CASE WHEN (5 - date_part('isodow', o_orderdate) + 7) % 7 = 0
+                      THEN 7
+                      ELSE (5 - date_part('isodow', o_orderdate) + 7) % 7
+                 END) * INTERVAL 1 DAY AS DATE) AS next_friday
+    FROM orders
+    WHERE o_orderkey % 100 = 0
+    """,
+)
+def s25_calendar_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Calendar arithmetic with end-of-month clamping: add_months
+    lands Jan 31 + 1 month on the LAST day of February (both engines
+    clamp rather than overflow into March — the semantic every
+    monthly-rolling report depends on, and the one naive
+    day-count arithmetic gets wrong), three months back for the
+    prior-quarter anchor, and next_day(_, 'Friday') — the
+    strictly-after next weekly expiry. The oracle spells next_day as
+    explicit ISO-dow modular arithmetic, so Spark's builtin is
+    certified against the definition rather than a twin builtin.
+
+    Pure projection — pushdown-friendly, no shuffle; the key filter
+    keeps the certified sample deterministic and small."""
+    orders = load_table(spark, sf_dir, "orders")
+    d = F.col("o_orderdate").cast("date")
+    return orders.filter(F.col("o_orderkey") % 100 == 0).select(
+        "o_orderkey",
+        d.alias("order_date"),
+        F.add_months(d, 1).alias("next_month"),
+        F.add_months(d, -3).alias("prior_quarter"),
+        F.next_day(d, "Friday").alias("next_friday"),
+    )
+
+
+@register(
+    "s26_binary_encoding",
+    oracle="""
+    SELECT p_partkey,
+           base64(encode(p_name)) AS name_b64,
+           hex(p_brand) AS brand_hex,
+           ascii(p_name) AS first_cp,
+           chr(65 + CAST(p_partkey % 26 AS INT)) AS letter,
+           CAST(octet_length(encode(p_name)) AS BIGINT) AS n_bytes,
+           CAST(bit_length(p_brand) AS BIGINT) AS n_bits,
+           decode(from_base64(base64(encode(p_name)))) = p_name
+               AS roundtrip_ok
+    FROM part
+    """,
+)
+def s26_binary_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Binary/text encoding functions: base64 and hex of string
+    bytes, first codepoint (`ascii`), codepoint→char (`chr`), byte
+    and bit lengths, and the encode→base64→unbase64→decode roundtrip
+    asserted as an in-row boolean — the wire-format toolkit every
+    ingest/export pipeline leans on (m5/m6 move real binary columns;
+    this certifies the scalar surface itself, value by value).
+
+    Engine note: Spark strings coerce to UTF-8 bytes via
+    CAST(s AS BINARY); DuckDB needs the explicit `encode()` — both
+    produce the same bytes, so base64/hex/octet_length agree exactly
+    (hex is uppercase in both). Pure scan projection: whole-stage
+    codegen, zero shuffles, column pruning to the two strings."""
+    part = load_table(spark, sf_dir, "part")
+    name_bin = F.col("p_name").cast("binary")
+    return part.select(
+        "p_partkey",
+        F.base64(name_bin).alias("name_b64"),
+        F.hex(F.col("p_brand")).alias("brand_hex"),
+        F.ascii(F.col("p_name")).alias("first_cp"),
+        F.chr(65 + (F.col("p_partkey") % 26).cast("int")).alias(
+            "letter"
+        ),
+        F.octet_length(F.col("p_name")).cast("bigint").alias(
+            "n_bytes"
+        ),
+        F.bit_length(F.col("p_brand")).cast("bigint").alias("n_bits"),
+        (
+            F.decode(F.unbase64(F.base64(name_bin)), "UTF-8")
+            == F.col("p_name")
+        ).alias("roundtrip_ok"),
+    )

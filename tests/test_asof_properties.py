@@ -2,7 +2,9 @@
 small key/timestamp sets — including heavy ties — the window-recipe
 as-of join must agree exactly with DuckDB's native ASOF JOIN
 (semantics: latest right row with r.ts <= l.ts per key; ties on the
-right side resolved to the same single row).
+right side resolved to the same single row). Also: the as-of
+tiebreak on duplicate right-side timestamps, and the tick-order key
+(functions/ordering.py) with its domain guard.
 """
 
 from __future__ import annotations
@@ -11,7 +13,11 @@ import duckdb
 import pandas as pd
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
+from security_master_spark.functions.ordering import (
+    tick_order_domain_violations,
+)
 from security_master_spark.operators.asof import asof_join
 
 # timestamps drawn from a tiny range so ties are the norm, not the edge
@@ -80,3 +86,71 @@ def test_asof_exact_tie_takes_equal_timestamp(spark):
 def test_asof_left_before_all_right_drops_row(spark):
     """A left row earlier than every right row has no match (inner)."""
     _run_case(spark, [(0, 0)], [(0, 5)])
+
+
+def test_asof_join_tiebreak_pins_duplicate_timestamps(spark):
+    """operators/asof.py: duplicate right-side (key, ts) rows are
+    engine/partition-arbitrary without a tiebreak; with one the pick
+    is a deterministic function of the data."""
+    from security_master_spark.operators.asof import asof_join
+
+    left = spark.createDataFrame(
+        [(1, "k", 100)], "lid long, k string, lts long"
+    )
+    right = spark.createDataFrame(
+        [("k", 100, 5.0), ("k", 100, 9.0), ("k", 99, 7.0)],
+        "k string, rts long, px double",
+    )
+    out = asof_join(
+        left, right, on=["k"], left_ts="lts", right_ts="rts",
+        tiebreak=[F.col("px").desc()],
+    ).collect()
+    assert len(out) == 1 and out[0].px == 9.0 and out[0].rts == 100
+
+
+def test_tick_order_key_matches_ts_id_order(spark):
+    """functions/ordering.py: the zero-padded string key's
+    lexicographic order must equal the (ts, id) order — including
+    same-instant rows where the id decides."""
+    from security_master_spark.functions.ordering import tick_order_key
+
+    rows = [
+        (1, "2024-01-01 00:00:00.000001"),
+        (3, "2024-01-01 00:00:00.000001"),
+        (2, "2024-01-01 00:00:00.000002"),
+        (10, "2024-01-01 00:00:00.000001"),
+    ]
+    df = spark.createDataFrame(rows, "event_id long, s string").select(
+        "event_id", F.col("s").cast("timestamp").alias("ts")
+    )
+    got = [
+        r.event_id
+        for r in df.orderBy(tick_order_key()).collect()
+    ]
+    assert got == [1, 3, 10, 2]  # ts first, then NUMERIC id order
+
+
+def test_tick_order_domain_violations_flags_out_of_contract_rows(spark):
+    """functions/ordering.py: the zero-padded key silently mis-orders
+    pre-epoch timestamps, negative ids, and ids ≥ 10^12; the guard
+    must surface exactly those rows and pass in-domain ones."""
+    df = spark.createDataFrame(
+        [
+            (1, "2024-01-01 00:00:00"),        # in-domain
+            (10**12 - 1, "1970-01-01 00:00:00"),  # boundary, in-domain
+            (10**12, "2024-01-01 00:00:00"),   # id too wide
+            (-1, "2024-01-01 00:00:00"),       # negative id
+            (2, "1969-12-31 23:59:59"),        # pre-epoch ts
+            (None, "2024-01-01 00:00:00"),     # NULL id
+        ],
+        "event_id long, s string",
+    ).select("event_id", F.col("s").cast("timestamp").alias("ts"))
+    bad = tick_order_domain_violations(df, "ts", "event_id").collect()
+    assert sorted(
+        (str(r.event_id) if r.event_id is not None else "NULL")
+        for r in bad
+    ) == sorted([str(10**12), "-1", "2", "NULL"])
+    ok = df.subtract(
+        tick_order_domain_violations(df, "ts", "event_id")
+    ).count()
+    assert ok == 2

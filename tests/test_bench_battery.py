@@ -3,7 +3,8 @@ across batteries, with the partial-battery guard (a battery missing a
 query must fail loudly — silently merging would lower the floor for
 exactly the queries it skipped) — plus the best-ever floor ledger's
 CLI surface (numeric source ordering, unanchored-query reporting, the
-median-normalized advisory column). No Spark session needed."""
+median-normalized advisory column) — and tools/driver_sim.py's argv
+validation. No Spark session needed."""
 
 from __future__ import annotations
 
@@ -240,3 +241,22 @@ def test_compare_normalized_quiet_when_uniform(
     floor.main(["--compare", "target.json"])
     out = capsys.readouterr().out
     assert "no query above 1.3x the battery median" in out
+
+
+def test_driver_sim_parse_argv_validates_json_flag():
+    """tools/driver_sim.py (round-9 ADVICE): a trailing --json used to
+    raise an uncaught IndexError and a reordered flag silently ate the
+    first query name as its value — both must exit with usage now."""
+    ds = _load("driver_sim")
+    assert ds.parse_argv([]) == (None, None)
+    assert ds.parse_argv(["q1", "q2"]) == (None, ["q1", "q2"])
+    assert ds.parse_argv(["q1", "--json", "/tmp/x.json"]) == (
+        "/tmp/x.json", ["q1"]
+    )
+    assert ds.parse_argv(["--json", "/tmp/x.json"]) == ("/tmp/x.json", None)
+    with pytest.raises(SystemExit):
+        ds.parse_argv(["q1", "--json"])  # missing value
+    with pytest.raises(SystemExit):
+        ds.parse_argv(["--json", "--json", "out"])  # flag as value
+    with pytest.raises(SystemExit):
+        ds.parse_argv(["--jsno", "out"])  # unknown flag, not a query

@@ -201,7 +201,7 @@ def test_l29_min_count_floor_routes_rare_tokens_to_oov(spark, tmp_path):
 
     import pandas as pd
 
-    from security_master_spark.plans.llm4 import (
+    from security_master_spark.plans.llm_text import (
         _MIN_COUNT,
         l29_unigram_surprisal,
     )
@@ -224,11 +224,12 @@ def test_l29_min_count_floor_routes_rare_tokens_to_oov(spark, tmp_path):
 
 
 def test_inline_trigram_sql_guards_short_docs(spark):
-    # Round-8 ADVICE (medium): llm16/llm20 spell trigram expansion as
-    # inline SQL rather than functions.text.shingles_of; their old
+    # Round-8 ADVICE (medium): llm_text.py and llm_dedup.py spell
+    # trigram expansion as inline SQL rather than
+    # functions.text.shingles_of; their old
     # sequence(1, greatest(size(t)-2, 0)) yields DESCENDING [1, 0]
     # for <3-token docs (index -1 / size under ANSI, spurious grams
-    # otherwise). The guarded spelling used at llm16.py/llm20.py must
+    # otherwise). The guarded spelling used there must
     # yield [] for short docs and exact trigrams otherwise.
     guarded = (
         "TRANSFORM(CASE WHEN size(t) >= 3 "

@@ -105,7 +105,7 @@ def test_g6_peel_reaches_fixpoint_and_core_property(spark, sf_dir):
     node's in-core degree must be >= k, and at the oracle SFs the peel
     must have CONVERGED (a 5th round changes nothing), making the
     checked result the true k-core."""
-    from security_master_spark.plans.graph3 import _CORE_K, _PEEL_ROUNDS
+    from security_master_spark.plans.graph import _CORE_K, _PEEL_ROUNDS
 
     for r in _Q["g6_kcore_peel"](spark, sf_dir).collect():
         if r.n_core_nodes:

@@ -5,16 +5,23 @@ The measurable claim: with rows physically ordered by ts inside each
 file, any ts-range predicate overlaps few row groups/files; unsorted
 writes spread every ts range across every row group, so nothing can be
 skipped. We assert on the footers directly (engine-independent truth)
-and on Spark's scan metrics."""
+and on Spark's scan metrics. Also: the configurable scratch root that
+every scratch-writing plan resolves, and the io17 escape round trip."""
 
 from __future__ import annotations
 
 import glob
+import os
 
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from security_master_spark.datasets import load_table
+from security_master_spark.plans.sources_io import (
+    SCRATCH_CONF_KEY,
+    _root,
+    _scratch,
+)
 from security_master_spark.sources.io import write_sorted_parquet
 
 
@@ -158,7 +165,6 @@ def test_zstd_roundtrip_footer_actually_says_zstd(spark, sf_dir):
 
     import pyarrow.parquet as pq
 
-    from security_master_spark.plans.io_scratch import _scratch
     from security_master_spark.plans.registry import queries
 
     assert queries()["io19_zstd_parquet_roundtrip"](spark, sf_dir).count() > 0
@@ -181,3 +187,73 @@ def test_load_table_leaves_the_cache_manager_empty(spark, sf_dir, monkeypatch):
     for name in ("region", "events"):
         load_table(spark, sf_dir, name)
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_scratch_root_is_one_config_point(spark, tmp_path, monkeypatch):
+    # Precedence: session conf > env > /tmp default — all through the
+    # SAME resolver every scratch-writing plan imports.
+    default = _root()
+    assert default == "/tmp/sms_io"
+    assert _scratch("/data/sf0.01", "x") == "/tmp/sms_io/sf0.01/x"
+
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH_ROOT", "/lake/scratch/")
+    assert _root() == "/lake/scratch"  # env override, slash-normalized
+    assert _scratch("/data/sf0.01", "x") == "/lake/scratch/sf0.01/x"
+
+    spark.conf.set(SCRATCH_CONF_KEY, str(tmp_path / "conf_root"))
+    try:
+        assert _root() == str(tmp_path / "conf_root")  # conf wins
+    finally:
+        spark.conf.unset(SCRATCH_CONF_KEY)
+    monkeypatch.delenv("SPARK_GRAFT_SCRATCH_ROOT")
+    assert _root() == default
+
+
+def test_scratch_conf_redirects_a_real_plan_write(
+    spark, sf_dir, tmp_path
+):
+    # End-to-end: point the conf at a fresh dir and run a
+    # scratch-writing registered query — its payload must land under
+    # the redirected root (this is exactly how a cluster points the
+    # engine at s3://…/scratch).
+    from security_master_spark.plans.sources_io import (
+        io19_zstd_parquet_roundtrip,
+    )
+
+    root = tmp_path / "lake"
+    spark.conf.set(SCRATCH_CONF_KEY, str(root))
+    try:
+        assert io19_zstd_parquet_roundtrip(spark, sf_dir).count() > 0
+        tag = os.path.basename(os.path.normpath(sf_dir))
+        assert (root / tag / "lineitem_zstd").is_dir()
+    finally:
+        spark.conf.unset(SCRATCH_CONF_KEY)
+
+
+def test_io17_escape_roundtrip_is_lossless(spark, tmp_path):
+    """The text-dump newline escape must reverse exactly, including
+    payloads with literal backslashes adjacent to 'n' (the odd-parity
+    case) — exercised through the registered query's own plan on a
+    synthetic documents table."""
+    from security_master_spark.plans.sources_io import io17_text_roundtrip
+
+    texts = [
+        "plain",
+        "line one\nline two",
+        "tab\there",
+        "back\\slash",
+        "trap\\nliteral",        # backslash + n, NOT a newline
+        "both\\\nmixed",          # backslash then real newline
+        "cr\rreturn",
+    ]
+    docs = spark.createDataFrame(
+        [(i, t, "en", "web", len(t)) for i, t in enumerate(texts)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    sf_dir = str(tmp_path / "sfx")
+    import os
+
+    os.makedirs(sf_dir, exist_ok=True)
+    docs.write.mode("overwrite").parquet(f"{sf_dir}/documents.parquet")
+    out = {r.doc_id: r.text for r in io17_text_roundtrip(spark, sf_dir).collect()}
+    assert out == {i: t for i, t in enumerate(texts)}

@@ -557,7 +557,7 @@ def test_quantization_error_bounded_by_half_step(spark):
     (the fixture embeddings never leave the clamp range)."""
     from pyspark.sql import functions as F
 
-    from security_master_spark.plans.llm8 import _Q_SCALE
+    from security_master_spark.plans.llm_curation import _Q_SCALE
 
     vals = [0.0, 0.049, -0.051, 1.23, -3.3, 12.6999, 13.5, -99.0]
     df = spark.createDataFrame([(v,) for v in vals], ["v"])
@@ -579,7 +579,7 @@ def test_stochastic_oscillator_bounds_and_obv_consistency(spark, sf_dir):
     can't express."""
     from pyspark.sql import functions as F
 
-    from security_master_spark.plans.domain7 import (
+    from security_master_spark.plans.domain_indicators import (
         d29_stochastic_oscillator,
         d31_obv,
     )
@@ -738,7 +738,7 @@ def test_observed_metrics_match_result(spark, sf_dir_mid):
     reading a different stream than the answer)."""
     from pyspark.sql import Observation
 
-    from security_master_spark.plans import relational2
+    from security_master_spark.plans import relational
 
     li = load_table(spark, sf_dir_mid, "lineitem").filter(
         F.col("l_shipdate") >= F.lit("1995-01-01").cast("timestamp")
@@ -913,7 +913,7 @@ def test_skyline_duplicate_and_tie_semantics(spark, sf_dir):
     point (dominates), verified against a brute-force reference."""
     import itertools
 
-    from security_master_spark.plans import relational3  # registration
+    from security_master_spark.plans import relational  # registration
     from security_master_spark.plans.registry import queries
 
     pts = [

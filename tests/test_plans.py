@@ -201,6 +201,27 @@ def test_registration_order_puts_unproven_queries_first():
     )
 
 
+def test_plan_modules_are_named_by_subject_and_register_queries():
+    """plans/ holds query modules only, one per subject: each module
+    other than the registry registers at least one query (shared
+    helpers live in functions/ or operators/), no module is named by
+    the round that added it, and queries() imports every one of them."""
+    import pkgutil
+    import sys
+
+    from security_master_spark import plans
+
+    registering = {fn.__module__ for fn in registry.queries().values()}
+    modules = [
+        m.name for m in pkgutil.iter_modules(plans.__path__) if m.name != "registry"
+    ]
+    for name in modules:
+        qualified = f"{plans.__name__}.{name}"
+        assert qualified in sys.modules, f"queries() did not import {name}"
+        assert qualified in registering, f"{name} registers no query"
+        assert not name[-1].isdigit(), f"{name} is named by round, not subject"
+
+
 def test_never_checked_queries_all_have_a_documented_wave():
     """Wave-completeness guard: the head-pin test above guards WHO
     spends the current window, but not whether every never-checked
@@ -342,7 +363,7 @@ def test_bucket_pruning_reaches_scan(spark, sf_dir):
     touches 1/8th of the files, no shuffle, no full scan."""
     from security_master_spark.datasets import load_table
     from security_master_spark.sources.io import write_bucketed_table
-    from security_master_spark.plans.io_scratch import _scratch
+    from security_master_spark.plans.sources_io import _scratch
     import os as _os
     from pyspark.sql import functions as F
 

@@ -96,7 +96,7 @@ def test_d47_breadth_cap_drops_mega_basket(spark):
     """An order with more distinct brands than _MAX_BASKET_BREADTH
     contributes nothing to the pair stage (the quadratic bound is a
     plan property), while normal orders still pair up."""
-    from security_master_spark.plans.domain10 import _MAX_BASKET_BREADTH
+    from security_master_spark.plans.domain_customers import _MAX_BASKET_BREADTH
 
     n_brands = _MAX_BASKET_BREADTH + 1
     rows = []

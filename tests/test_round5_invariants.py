@@ -270,7 +270,7 @@ def test_black_scholes_parity_and_reference_value(spark, sf_dir):
     # Analytic anchors through the same polynomial, within the A&S
     # 7.1.26 error bound (|err| < 1.5e-7): N(0)=0.5 and the
     # reflection identity N(x)+N(-x)=1 (exact by construction).
-    from security_master_spark.plans.domain12 import _norm_cdf
+    from security_master_spark.plans.domain_pricing import _norm_cdf
     from pyspark.sql import functions as F2
 
     row = ref.select(

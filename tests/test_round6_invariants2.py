@@ -166,7 +166,7 @@ def test_bm25_matches_brute_force_python(spark, sf_dir):
     """Recompute BM25 in plain Python over the collected corpus and
     compare the top-10 (score, doc) list."""
     from security_master_spark.datasets import load_table
-    from security_master_spark.plans.llm14 import _K1, _B, _QUERY_TERMS
+    from security_master_spark.plans.llm_text import _K1, _B, _QUERY_TERMS
 
     docs = {
         r.doc_id: r.text.split()

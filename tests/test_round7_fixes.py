@@ -39,7 +39,7 @@ def test_d77_cone_bands_are_ordered_and_full_window_only(spark, sf_dir):
         daily_returns,
     )
     from security_master_spark.plans import registry
-    from security_master_spark.plans.domain18 import _CONE_H
+    from security_master_spark.plans.domain_pricing import _CONE_H
 
     rows = (
         registry.queries()["d77_volatility_cone"](spark, sf_dir)

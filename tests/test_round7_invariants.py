@@ -179,7 +179,7 @@ def test_d88_legs_compose_to_close_to_close(spark, sf_dir):
         daily_closes,
         daily_returns,
     )
-    from security_master_spark.plans.domain26 import (
+    from security_master_spark.plans.domain_risk import (
         d88_overnight_intraday,  # noqa: F401 (registration)
     )
 
@@ -279,7 +279,7 @@ def test_io23_legacy_count_matches_split(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from security_master_spark.datasets import load_table
-    from security_master_spark.plans.sources_io14 import _GEN_SPLIT
+    from security_master_spark.plans.sources_io import _GEN_SPLIT
 
     got = sum(
         r.n_legacy
@@ -298,7 +298,7 @@ def test_d79_cusum_detects_planted_changepoint(spark, sf_dir):
     fire. Runs the exact d79 plan via the factored cusum_panel."""
     import datetime
 
-    from security_master_spark.plans.domain19 import cusum_panel
+    from security_master_spark.plans.domain_statistics import cusum_panel
 
     base = datetime.date(2024, 1, 1)
     rows = []

@@ -1,6 +1,6 @@
 """Property-based verification of the volume-bar assignment rule
-(plans/domain11.py:d50) and the count-min sketch guarantee
-(plans/aggregates6.py:a26) on random inputs — the fixture mirror
+(plans/domain_ticks.py:d50) and the count-min sketch guarantee
+(plans/aggregates.py:a26) on random inputs — the fixture mirror
 proves one dataset; these prove the law.
 """
 
